@@ -25,6 +25,7 @@ recall against exact Jaccard on small fixtures (SURVEY §7.3#3).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from dumbo_spark.functions.text import ngrams, tokens
 from dumbo_spark.operators._checkpoint import (  # shared with graph.py
@@ -181,6 +182,75 @@ def dedup_fuzzy_verified(
     )
 
 
+#: Largest edge list connected_components solves on the driver instead
+#: of running its distributed loop (measurements in its docstring).
+_LOCAL_MAX_EDGES = 100_000
+
+
+def _not_converged(max_iter: int) -> RuntimeError:
+    return RuntimeError(
+        f"connected_components did not converge within max_iter="
+        f"{max_iter} rounds (a component's diameter exceeds it); "
+        "raise max_iter rather than consuming split components"
+    )
+
+
+def _solve_on_driver(
+    e0: DataFrame, node: StructField, max_iter: int
+) -> DataFrame | None:
+    """connected_components' driver path: the labels of a graph with
+    at most ``_LOCAL_MAX_EDGES`` edges and non-null integral or
+    binary-collated string ids, else None (the caller then runs the
+    distributed loop over the same ``e0``)."""
+    if not (isinstance(node.dataType, IntegralType) or node.dataType == StringType()):
+        return None
+    rows = e0.limit(_LOCAL_MAX_EDGES + 1).collect()
+    if len(rows) > _LOCAL_MAX_EDGES or any(None in (a, b) for a, b in rows):
+        return None
+    _release_local_checkpoint(e0)
+    neighbors: dict = {}
+    for a, b in rows:
+        neighbors.setdefault(a, []).append(b)
+        neighbors.setdefault(b, []).append(a)
+    # Roots in ascending order (Python and Spark order ints and binary
+    # strings alike), so each BFS starts from its component's minimum;
+    # radius ends as R, the loop's last changing round.
+    label: dict = {}
+    radius = 0
+    for root in sorted(neighbors):
+        if root in label:
+            continue
+        label[root] = root
+        frontier, depth = [root], 0
+        while True:
+            reached = []
+            for u in frontier:
+                for v in neighbors[u]:
+                    if v not in label:
+                        label[v] = root
+                        reached.append(v)
+            if not reached:
+                break
+            frontier, depth = reached, depth + 1
+        radius = max(radius, depth)
+    if radius >= max_iter:
+        raise _not_converged(max_iter)
+    schema = StructType(
+        [
+            StructField("doc_id", node.dataType, node.nullable),
+            StructField("cluster_id", node.dataType, True),
+        ]
+    )
+    # From an Arrow table Spark builds a LocalRelation, which (unlike a
+    # frame of Python rows) knows its size, so joins over the labels
+    # still plan as broadcasts, as they do over the loop's checkpoint.
+    # Imported here: most queries never take this path.
+    import pyarrow as pa
+
+    table = pa.table({"doc_id": list(label), "cluster_id": list(label.values())})
+    return e0.sparkSession.createDataFrame(table, schema)
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
@@ -223,6 +293,31 @@ def connected_components(
     sf0.1: chain=2 beats 1 (dedup_canonical 4.80→4.31 s,
     copurchase_components 6.26→5.30 s medians); chain=3 measured equal
     to 2, so 2 is the default.
+
+    Driver path: most graphs this engine feeds here are tiny (at sf0.1
+    every registered consumer passes 16–3,573 edges), and for them each
+    round's Spark job is pure overhead. So after the input checkpoint
+    the first ``_LOCAL_MAX_EDGES + 1`` edges are collected, and a graph
+    of at most ``_LOCAL_MAX_EDGES`` edges whose ids are non-null and of
+    an integral or binary-collated string type is solved on the driver
+    by one BFS from each component minimum. It comes back as a local
+    DataFrame with the loop's exact schema and the same labels, the
+    component minima. ``max_iter`` keeps its meaning there: the loop's
+    labels stop changing after round R, the largest distance from any
+    node to its component's minimum, so its first identity round is
+    R + 1 (the argument given for ``chain`` above) and it raises exactly
+    when R >= max_iter; the driver path computes R and raises then too.
+    Every other input (more edges, a null id, another id type, or any
+    ``durable_dir`` run, whose restart contract needs the files) runs
+    the loop below over the same checkpointed edges, so a large graph
+    still builds its edges once. Median wall time including a noop
+    write, driver path vs loop, on 4 cores (``local[4]``) over seeded
+    random graphs with as many nodes as edges: 10³ edges 0.18 vs 3.95 s,
+    10⁴ 0.20 vs 4.64 s, 10⁵ 1.08 vs 9.34 s, 10⁶ 12.2 vs 59.6 s. There is
+    no crossover in that range, so the 10⁵ bound is set by driver memory
+    and by what the probe costs a larger graph (collecting 100,001 rows
+    before falling through: 19.2 vs 19.7 s medians on 3·10⁵ edges,
+    within noise).
 
     Durability contract: with ``durable_dir=None`` truncation uses
     ``localCheckpoint()`` — executor-memory blocks, fast, but an
@@ -289,6 +384,10 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
+    if durable_dir is None:
+        solved = _solve_on_driver(e0, both.schema["src"], max_iter)
+        if solved is not None:
+            return solved
     nodes = both.select(F.col("src").alias("node")).distinct()
     # Self-loop trick: append (v, v) for every node, so the self row
     # delivers the node's OWN current label into its min-aggregation
@@ -386,11 +485,7 @@ def connected_components(
         adj.unpersist()
         _release_local_checkpoint(e0)
     if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter="
-            f"{max_iter} rounds (a component's diameter exceeds it); "
-            "raise max_iter rather than consuming split components"
-        )
+        raise _not_converged(max_iter)
     out = labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
     if durable_dir is not None:
         # stable final materialization: the alternating labels_{0,1}
@@ -1186,7 +1281,9 @@ def near_match_values(
     are candidates; pick the block end where values AGREE (for
     adjective-noun domains that is the suffix — edits concentrate in
     the head word), and widen by unioning both block keys if needed.
-    ``levenshtein`` is a JVM intrinsic — no Python boundary.
+    ``levenshtein`` is a JVM intrinsic — no Python boundary — and
+    its ``max_dist`` bound lets it stop early, returning -1 for pairs
+    beyond it.
     """
     vals = df.select(F.col(col).alias("val")).distinct()
     blk = (
@@ -1204,9 +1301,9 @@ def near_match_values(
         .select(
             F.col("a.val").alias("val_a"),
             F.col("b.val").alias("val_b"),
-            F.levenshtein("a.val", "b.val").alias("dist"),
+            F.levenshtein("a.val", "b.val", max_dist).alias("dist"),
         )
-        .where(F.col("dist") <= max_dist)
+        .where(F.col("dist") >= 0)
     )
 
 

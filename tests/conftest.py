@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
@@ -68,6 +69,16 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter):
+    """Say which tier ran: a core-tier pass is not a full-suite pass."""
+    skipped = terminalreporter.stats.get("skipped", [])
+    n = sum("full tier" in str(rep.longrepr) for rep in skipped)
+    if n:
+        terminalreporter.write_line(
+            f"full tier: {n} tests skipped (set SPARK_GRAFT_FULL_TESTS=1 to run them)"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dumbo_spark.session import get_session
@@ -79,3 +90,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def on_both_cc_paths(test):
+    """Run a connected_components test twice under its own name: once
+    as is (small graphs take the driver path), then with the driver path
+    switched off, so the distributed loop keeps the same coverage."""
+
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        from dumbo_spark.operators import dedup
+
+        test(*args, **kwargs)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "_LOCAL_MAX_EDGES", 0)
+            test(*args, **kwargs)
+
+    return run

@@ -7,6 +7,7 @@ dumbo-mapredtest-style edge cases (empty input, nulls, single group).
 from __future__ import annotations
 
 import pytest
+from conftest import on_both_cc_paths
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -257,6 +258,7 @@ def test_salted_topk_matches_plain_window(spark, sf_dir):
     assert len(plain) == len(salted)
 
 
+@on_both_cc_paths
 def test_connected_components_chain_and_island(spark):
     """A~B~C chain collapses to one cluster labeled min(id); isolated
     pair stays its own cluster."""
@@ -270,6 +272,7 @@ def test_connected_components_chain_and_island(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
+@on_both_cc_paths
 def test_connected_components_durable_checkpoint(spark, tmp_path):
     """durable_dir round-trips labels through parquet each round (the
     cluster-durability path); result identical to the localCheckpoint
@@ -310,6 +313,7 @@ def test_connected_components_shared_durable_dir_no_collision(spark, tmp_path):
     assert (tmp_path / "run-0").exists() and (tmp_path / "run-1").exists()
 
 
+@on_both_cc_paths
 def test_connected_components_random_graphs_match_union_find(spark):
     """Randomized differential for the one-shuffle-per-round CC (self-
     loop + pre-partitioned adjacency + fused convergence scan): on
@@ -505,6 +509,7 @@ def test_pagerank_random_graphs_match_reference(spark):
             assert abs(got[v] - want[v]) < 1e-9, f"trial {trial}, node {v}"
 
 
+@on_both_cc_paths
 def test_iterative_operators_release_stale_round_blocks(spark):
     """The iterative loops free each stale round's checkpoint blocks
     (the shared-session leak): after a CC run only the input-edge-free

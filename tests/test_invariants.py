@@ -72,6 +72,10 @@ ALLOWED_MATERIALIZE_SITES = {
         "batched BPE: .limit(batch_k) candidates per round — batch_k "
         "rows/round"
     ),
+    ("operators/dedup.py", "_solve_on_driver"): (
+        "connected_components probe: .limit(_LOCAL_MAX_EDGES + 1) edges "
+        "(10^5 + 1 rows); larger graphs fall through to the loop"
+    ),
     ("operators/similarity.py", "det_kmeans_cells"): (
         "Lloyd init .limit(n_cells) seeds + per-iteration centroid "
         "aggregate (n_cells x dim rows) — both codebook-sized"

@@ -17,6 +17,7 @@ from __future__ import annotations
 import math
 
 import duckdb
+from conftest import on_both_cc_paths
 
 
 # the PRODUCT formula, not a copy — reverting the similarity.py fix
@@ -190,6 +191,7 @@ def test_extract_features_decodes_bmp_end_to_end(spark):
     assert got[2] == decode_image(b"plain text payload")
 
 
+@on_both_cc_paths
 def test_connected_components_converges_on_deep_chains(spark):
     # r12 review: max_iter used to be a silent output bound — a
     # path-shaped component deeper than it SPLIT, and every

@@ -3,6 +3,7 @@ ExactSubstr removal, keep-first) and the shared interval-merge trim
 tail it reuses from substring_dedup_trim."""
 
 import pyspark.sql.functions as F
+from conftest import on_both_cc_paths
 
 from dumbo_spark.operators import dedup
 
@@ -94,6 +95,7 @@ def test_selfrepeat_plan_stays_jvm_side(spark, sf_dir):
     assert s["bnl_joins"] == 0
 
 
+@on_both_cc_paths
 def test_connected_components_chain_values_identical(spark):
     """r15 `chain` (rounds fused per materialize job) is a pure
     scheduling change: labels identical for chain 1/2/3 on a graph
@@ -116,6 +118,7 @@ def test_connected_components_chain_values_identical(spark):
     assert {c for _, c in results[0]} == {1, 20, 30}
 
 
+@on_both_cc_paths
 def test_connected_components_chain_keeps_nonconvergence_raise(spark):
     """The max_iter safety valve counts PROPAGATION ROUNDS, not jobs:
     a diameter-8 path still raises at max_iter=3 under chain=2 (3

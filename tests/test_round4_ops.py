@@ -156,6 +156,25 @@ def test_near_match_values_blocking_modes(spark):
     pairs_pre = {(r["val_a"], r["val_b"]) for r in pre.collect()}
     assert ("red bolt", "red ring") in pairs_pre  # same prefix block, dist 4
     assert ("old bolt", "red bolt") not in pairs_pre  # different prefix
+    # the bounded levenshtein keeps exactly the pairs, and the dist
+    # values, that an unbounded distance filtered at max_dist keeps
+    words = spark.createDataFrame(
+        [(w,) for w in ("bolt", "bold", "boat", "bolts", "colt", "x", "")],
+        "name string",
+    )
+    for max_dist in (0, 1, 2, 5):
+        got = near_match_values(words, "name", max_dist=max_dist, block_chars=0)
+        a, b = words.alias("a"), words.alias("b")
+        want = (
+            a.join(b, F.col("a.name") < F.col("b.name"))
+            .select(
+                F.col("a.name").alias("val_a"),
+                F.col("b.name").alias("val_b"),
+                F.levenshtein("a.name", "b.name").alias("dist"),
+            )
+            .where(F.col("dist") <= max_dist)
+        )
+        assert sorted(got.collect()) == sorted(want.collect()), max_dist
 
 
 def test_posting_lists_band_and_order(spark):

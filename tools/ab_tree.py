@@ -8,8 +8,10 @@ host (same-code driver runs differ per-query by up to 5.4x).
 
     python tools/ab_tree.py <old_tree> <query> [rounds=5]
 
-Each round runs old then new, one fresh process each; a process builds
-the standard session (SPARK_GRAFT_CPUS), warms the JVM, and times the
+Each round runs both trees, one fresh process each, and alternates
+which tree goes first so a drifting host does not favour either; a
+process builds the standard session (SPARK_GRAFT_CPUS, default: the
+CPUs this process may use), warms the JVM, and times the
 query median-of-3 with the noop sink, clearing caches and persistent
 RDDs between runs (true per-run cold cost — the adjudication
 discipline, not the sweep's). Prints a per-round table plus medians
@@ -31,7 +33,7 @@ sys.path.insert(0, tree)
 from dumbo_spark.registry import QUERIES
 from dumbo_spark.session import get_session, release_persistent_rdds
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 spark = get_session("ab_tree", cpus=cpus)
 spark.range(1_000_000).selectExpr("sum(id)").collect()
 samples = []
@@ -48,17 +50,19 @@ print(json.dumps({"median": statistics.median(samples), "runs": samples}))
 
 
 def run_one(tree: str, name: str) -> dict:
-    env = dict(os.environ)
-    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     out = subprocess.run(
         [sys.executable, "-c", _CHILD, tree, name],
         capture_output=True,
         text=True,
-        env=env,
         timeout=900,
     )
-    line = out.stdout.strip().splitlines()[-1]
-    return json.loads(line)
+    lines = out.stdout.strip().splitlines()
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(
+            f"{name} on {tree} gave no result (exit {out.returncode}):\n"
+            f"{out.stderr}"
+        )
+    return json.loads(lines[-1])
 
 
 def main() -> None:
@@ -70,8 +74,12 @@ def main() -> None:
     print(f"query={name} old={old_tree} new={new_tree} rounds={rounds}")
     print(f"loadavg at start: {os.getloadavg()}")
     for r in range(rounds):
-        o = run_one(old_tree, name)
-        n = run_one(new_tree, name)
+        if r % 2 == 0:
+            o = run_one(old_tree, name)
+            n = run_one(new_tree, name)
+        else:
+            n = run_one(new_tree, name)
+            o = run_one(old_tree, name)
         olds.append(o["median"])
         news.append(n["median"])
         print(
