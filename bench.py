@@ -766,7 +766,6 @@ def write_artifacts(record: dict, here: str) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     # a 50+ query × 3-run sweep in one 32-thread JVM accumulates
     # broadcast/codegen/shuffle state; on the 8g default heap the GC
     # pressure shows up as erratic 3-5× inflation of individual query
@@ -788,7 +787,7 @@ def main() -> None:
     # pre-sweep load sample: the END-of-sweep loadavg is the sweep's own
     # load, so THIS is the reading that proves a quiet close window
     loadavg_before = _loadavg()
-    spark = get_session("dumbo_spark_bench", cpus=cpus)
+    spark = get_session("dumbo_spark_bench")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm up JVM
 
     timings: dict[str, float] = {}

@@ -16,6 +16,8 @@ Reference subcommands and their re-expression:
 |   (backends/streaming.py |   (sources/typedbytes.py codec; migration    |
 |    :~120)                |   path: .tb → parquet, then stay columnar)   |
 | doctest (:~245)          | dropped — pytest owns testing (SURVEY §5)    |
+| (none)                   | ``warmup`` — build the JVM start-up archive  |
+|                          | once, ahead of the first job                 |
 
 Usage: ``python -m dumbo_spark.cli <subcommand> ...``
 """
@@ -249,6 +251,24 @@ def cmd_dq(args: argparse.Namespace) -> int:
     return 1 if bad else 0
 
 
+def cmd_warmup(args: argparse.Namespace) -> int:
+    """Build the driver JVM's class-data-sharing archive ahead of the
+    first session (session.get_session): print its path, size and build
+    seconds, or why it is off. Off is not an error — sessions then use
+    the plain JVM start-up."""
+    from dumbo_spark.session import prepare_archive
+
+    archive = prepare_archive()
+    if archive.path is None:
+        print(archive.note)
+        return 0
+    print(f"archive: {archive.path}")
+    print(f"size_bytes: {os.path.getsize(archive.path)}")
+    print("build_s: " + ("0 (already built)" if archive.build_s is None
+                         else f"{archive.build_s:.1f}"))
+    return 0
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="dumbo-spark", description=__doc__)
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -332,6 +352,12 @@ def build_parser() -> argparse.ArgumentParser:
     )
     dqp.add_argument("sf_dir")
     dqp.set_defaults(fn=cmd_dq)
+
+    wu = sub.add_parser(
+        "warmup", help="build the JVM class-data-sharing archive that "
+                       "shortens session start-up"
+    )
+    wu.set_defaults(fn=cmd_warmup)
     return p
 
 

@@ -56,6 +56,17 @@ def parse_params(pairs: Iterable[str]) -> Params:
     return out
 
 
+def _with_params(fn, params: Params):
+    """A class-based mapper, reducer or combiner (dumbo's ``MapRedBase``
+    style: a class whose instances are called per record) is
+    instantiated with ``self.params`` already set, as dumbo does; plain
+    callables pass through. The subclass carries the params, so they
+    are readable in ``__init__`` too and ship inside the pickled task."""
+    if isinstance(fn, type):
+        return type(fn.__name__, (fn,), {"params": params})()
+    return fn
+
+
 def run(
     mapper: MapFn,
     reducer: RedFn | None = None,
@@ -64,6 +75,10 @@ def run(
     argv: list[str] | None = None,
 ):
     """Execute one map[/reduce] pass over -input paths, write -output.
+
+    ``-param k=v`` pairs reach class-based mappers, reducers and
+    combiners as ``self.params`` (a ``Params``); closures capture their
+    own configuration instead.
 
     Returns the result DataFrame (also written as parquet), so tests
     can call ``run(..., argv=[...])`` directly — the successor of
@@ -75,6 +90,10 @@ def run(
     from dumbo_spark.sources import textio
 
     args = _parse_args(argv)
+    params = parse_params(args.params)
+    mapper, reducer, combiner = (
+        _with_params(fn, params) for fn in (mapper, reducer, combiner)
+    )
     spark = get_session("dumbo_spark_run")
 
     frames = []

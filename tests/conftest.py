@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import functools
+import logging
 import os
 import sys
 
@@ -70,20 +71,38 @@ def pytest_collection_modifyitems(config, items):
 
 
 def pytest_terminal_summary(terminalreporter):
-    """Say which tier ran: a core-tier pass is not a full-suite pass."""
+    """Say which tier ran (a core-tier pass is not a full-suite pass)
+    and how the spark fixture's JVM started."""
     skipped = terminalreporter.stats.get("skipped", [])
     n = sum("full tier" in str(rep.longrepr) for rep in skipped)
     if n:
         terminalreporter.write_line(
             f"full tier: {n} tests skipped (set SPARK_GRAFT_FULL_TESTS=1 to run them)"
         )
+    for line in _startup_lines:
+        terminalreporter.write_line(f"spark fixture start-up: {line}")
+
+
+# the spark fixture's start-up log line (class-data-sharing archive
+# used, built or off), repeated in the terminal summary
+_startup_lines: list[str] = []
 
 
 @pytest.fixture(scope="session")
 def spark():
     from dumbo_spark.session import get_session
 
-    s = get_session("dumbo_spark_tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    log = logging.getLogger("dumbo_spark.session")
+    handler = logging.Handler(logging.INFO)
+    handler.emit = lambda record: _startup_lines.append(record.getMessage())
+    level = log.level
+    log.addHandler(handler)
+    log.setLevel(logging.INFO)
+    try:
+        s = get_session("dumbo_spark_tests")
+    finally:
+        log.removeHandler(handler)
+        log.setLevel(level)
     yield s
 
 

@@ -139,3 +139,26 @@ def test_observed_metrics_ride_the_action(spark, sf_dir):
     got = obs.get
     assert got["rows"] == n
     assert 0 < got["high_discount"] < n
+
+
+def test_run_param_reaches_class_mapper(spark, tmp_path):
+    """-param k=v reaches a class-based mapper as self.params, as
+    dumbo's MapRedBase receives it: the stopword it names is dropped."""
+    from dumbo_spark.compat import run
+
+    src = tmp_path / "in.txt"
+    src.write_text("the quick the fox\n")
+
+    class Mapper:
+        def __call__(self, key, value):
+            for w in value.split():
+                if w != self.params.get("stopword"):
+                    yield (w, 1.0)
+
+    def words(*extra: str) -> list[str]:
+        out = str(tmp_path / f"out{len(extra)}")
+        argv = ["-input", str(src), "-output", out, "-numreducetasks", "0", *extra]
+        return sorted(r.key for r in run(Mapper, argv=argv).collect())
+
+    assert words() == ["fox", "quick", "the", "the"]
+    assert words("-param", "stopword=the") == ["fox", "quick"]

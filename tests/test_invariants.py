@@ -72,6 +72,10 @@ ALLOWED_MATERIALIZE_SITES = {
         "batched BPE: .limit(batch_k) candidates per round — batch_k "
         "rows/round"
     ),
+    ("session.py", "_dump_archive"): (
+        "CDS archive warm-up in its own child process: fixed spark.range "
+        "inputs of at most 1,000 rows"
+    ),
     ("operators/dedup.py", "_solve_on_driver"): (
         "connected_components probe: .limit(_LOCAL_MAX_EDGES + 1) edges "
         "(10^5 + 1 rows); larger graphs fall through to the loop"

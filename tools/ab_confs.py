@@ -27,25 +27,13 @@ SUBSET = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     runs = int(os.environ.get("BENCH_RUNS", "3"))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     overrides = dict(a.split("=", 1) for a in sys.argv[1:])
 
-    from pyspark.sql import SparkSession
+    from dumbo_spark.session import get_session
 
-    from dumbo_spark import session as sess
-
-    orig_get = sess.get_session
-
-    def patched(app_name: str = "dumbo_spark", cpus_: int | None = None):
-        spark = orig_get(app_name, cpus_ or cpus)
-        return spark
-
-    # apply overrides at builder time by monkey-adding to RUNTIME? simplest:
-    # build the session ourselves with the overrides, then reuse.
-    builder = SparkSession.builder
-    spark = orig_get("ab_confs", cpus=cpus)
+    spark = get_session("ab_confs")
     can_set = True
     for k, v in overrides.items():
         try:

@@ -23,7 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     runs = int(os.environ.get("BENCH_RUNS", "3"))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
 
@@ -31,7 +30,7 @@ def main() -> None:
     from dumbo_spark.session import get_session, release_persistent_rdds
 
     names = sys.argv[1:]
-    spark = get_session("dumbo_spark_profile", cpus=cpus)
+    spark = get_session("dumbo_spark_profile")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm up
 
     tracker = spark.sparkContext.statusTracker()
