@@ -16,20 +16,22 @@ restores the full-registry sweep for local iteration (its line may
 exceed the driver buffer — builder-side use only, recorded in
 BENCH.json).
 
-Execution is measured with the noop sink (full plan runs, nothing
-lands on the driver) after a warm-up action so JVM/codegen startup is
-not billed to the first query. BENCH_RUNS>1 takes the median.
+Every query is timed through ``dumbo_spark.profiling.measure()``: the
+noop sink (full plan runs, nothing lands on the driver), caches and
+pins released after every run, after a warm-up action so JVM/codegen
+startup is not billed to the first query. BENCH_RUNS>1 takes the median.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from dumbo_spark.profiling import measure, warm_up  # noqa: E402
 
 # Representative subset: one+ per SURVEY §2 family, all perf-sensitive
 # paths (fact⋈fact joins, dedup family, ANN family, windows, streaming
@@ -435,16 +437,12 @@ def core_suite_pass(
     VISIBILITY across ~50 fast operators, and first-execution codegen
     is part of what a regression would inflate; the per-name detail
     ships in BENCH.json's core_suite_detail so a moved total can be
-    pinpointed without re-running the sweep."""
-    detail: dict[str, float] = {}
-    for n in core_suite_names(set(queries)):
-        t0 = time.perf_counter()
-        queries[n].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        detail[n] = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
-        release_persistent_rdds(spark)
+    pinpointed without re-running the sweep. ``measure()`` does the
+    releasing; ``release_persistent_rdds`` is unused."""
+    detail = {
+        n: round(measure(spark, queries[n].fn, sf_dir, 1).samples[0], 3)
+        for n in core_suite_names(set(queries))
+    }
     return round(sum(detail.values()), 3), detail
 
 
@@ -459,7 +457,8 @@ def emit_line(timings: dict[str, float], sf: str) -> str:
     core_suite row, so including its ~35-40s made totals
     round-incomparable); core_suite still appears as a per-query row
     AND as its own top-level key so the aggregate's movement stays
-    bench-visible.
+    bench-visible. ``metric`` says how many of the summed queries the
+    printed map holds.
     """
     core = timings.get("core_suite")
     total = round(sum(v for n, v in timings.items() if n != "core_suite"), 3)
@@ -468,6 +467,7 @@ def emit_line(timings: dict[str, float], sf: str) -> str:
     # appear-one-round-vanish-the-next rows, i.e. the phantom-drop bug
     # this rewrite removes. New rows are added by editing PRINTED.
     base = {n: timings[n] for n in PRINTED if n in timings}
+    n_printed = len(set(base) - {"core_suite"})
     for ndigits in (3, 2, 1, 0):
         kept = dict(
             sorted(
@@ -477,7 +477,8 @@ def emit_line(timings: dict[str, float], sf: str) -> str:
         )
         payload = {
             "metric": (
-                f"total wall-clock, {n_headline} queries, sf{sf}"
+                f"total wall-clock, {n_headline} queries "
+                f"({n_printed} of {n_headline} printed), sf{sf}"
             ),
             "value": total,
             "unit": "sec",
@@ -577,6 +578,9 @@ def adjudicate(
     Returns {"calib_spark_sec": float, "rows": {name: {...}}}; empty
     rows dict when nothing breached or no close baseline exists.
 
+    Re-runs go through ``measure()``, which does the releasing;
+    ``release_persistent_rdds`` is unused.
+
     Baseline note: BENCH_CLOSE.json is whatever close is committed at
     run time — for the driver's sweep that is THIS round's builder
     close (the exact comparison the judge reads); for a builder
@@ -604,21 +608,13 @@ def adjudicate(
         suspects = suspects[:ADJ_MAX_ROWS]
     out["calib_spark_sec"] = spark_calib(spark)
     for ratio, name, sweep_sec, close_sec in suspects:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            # synthetic rows (core_suite) re-run via their own runner;
-            # registry rows re-run as the standard noop write
-            if extra_runners and name in extra_runners:
-                extra_runners[name]()
-            else:
-                queries[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-            release_persistent_rdds(spark)
-        iso = round(statistics.median(runs), 3)
+        # synthetic rows (core_suite) re-run via their own runner;
+        # registry rows re-run as the standard noop write
+        runner = (extra_runners or {}).get(name)
+        fn = (lambda _spark, _sf: runner()) if runner else queries[name].fn
+        m = measure(spark, fn, sf_dir, 3)
+        runs = [round(s, 3) for s in m.samples]
+        iso = round(m.median, 3)
         out["rows"][name] = {
             "sweep_sec": sweep_sec,
             "close_sec": close_sec,
@@ -730,13 +726,10 @@ def build_record(
         for n in sorted(top15)
     }
     # VERDICT r15 Next #2c: per-run samples for EVERY query, in run
-    # order. The sweep clears caches between queries but not between
-    # the 3 runs of one query, so run 1 of a persist-heavy operator is
-    # its true cold cost and runs 2-3 read the run-1 cache — the median
-    # hides that (it concealed containment_join's 13-16s true cost for
-    # rounds). Shipping the raw samples makes a flattered median
-    # visible (run1 >> run2/3) without changing the timing methodology
-    # the round-over-round comparison depends on.
+    # order. Caches and pins are released after every run, so no run
+    # reads another's cache (until that release moved into measure(),
+    # runs 2-3 read run 1's and the median hid containment_join's
+    # 13-16s cost); run 1 still pays first-execution codegen.
     record["samples"] = {
         n: [round(s, 3) for s in all_samples[n]] for n in sorted(all_samples)
     }
@@ -779,8 +772,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.session import get_session
-    from dumbo_spark.session import release_persistent_rdds
+    from dumbo_spark.session import get_session, release_persistent_rdds
 
     names = sorted(QUERIES) if full else [n for n in HEADLINE if n in QUERIES]
 
@@ -788,7 +780,7 @@ def main() -> None:
     # load, so THIS is the reading that proves a quiet close window
     loadavg_before = _loadavg()
     spark = get_session("dumbo_spark_bench")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm up JVM
+    warm_up(spark)
 
     timings: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
@@ -798,24 +790,9 @@ def main() -> None:
     # the series in the artifact next to the timings it contextualizes.
     calib_sweep: list[dict] = []
     for i, name in enumerate(names):
-        q = QUERIES[name]
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(samples), 3)
-        all_samples[name] = samples
-        # operators may persist() shared subplans (LSH bands, IVF cells);
-        # drop them so queries are timed in isolation and executor memory
-        # stays flat across the sweep
-        spark.catalog.clearCache()
-        # clearCache only drops CACHED PLANS — localCheckpoint blocks
-        # (the iterative CC/PageRank label tables) survive it and
-        # accumulate executor memory across the sweep (measured 4x
-        # inflation of an iterative query in a shared session vs its
-        # fresh-process time); release them explicitly
-        release_persistent_rdds(spark)
+        m = measure(spark, QUERIES[name].fn, sf_dir, runs)
+        timings[name] = round(m.median, 3)
+        all_samples[name] = m.samples
         if (i + 1) % CALIB_EVERY == 0:
             calib_sweep.append(
                 {"after_query": i + 1, "calib_spark_sec": spark_calib(spark)}

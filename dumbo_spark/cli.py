@@ -18,6 +18,8 @@ Reference subcommands and their re-expression:
 | doctest (:~245)          | dropped — pytest owns testing (SURVEY §5)    |
 | (none)                   | ``warmup`` — build the JVM start-up archive  |
 |                          | once, ahead of the first job                 |
+| (none)                   | ``profile q...`` — time queries, count their |
+|                          | Spark jobs and stages (profiling.measure)    |
 
 Usage: ``python -m dumbo_spark.cli <subcommand> ...``
 """
@@ -218,15 +220,39 @@ def cmd_plan(args: argparse.Namespace) -> int:
         "exchanges",
         "broadcast_joins",
         "sortmerge_joins",
-        "codegen_spans",
+        "wholestage_codegen_spans",
         "python_evals",
         "pushed_filters",
         "take_ordered",
+        "cartesian_products",
+        "bnl_joins",
+        "unpart_windows",
     ):
-        if k in s:
-            print(f"{k}: {s[k]}")
+        print(f"{k}: {s[k]}")
     if args.verbose:
         print(s["plan"])
+    return 0
+
+
+def cmd_profile(args: argparse.Namespace) -> int:
+    """Time registered queries through ``profiling.measure()``: median
+    and per-run seconds, and the Spark jobs and stages of the last run."""
+    from dumbo_spark.profiling import measure, warm_up
+    from dumbo_spark.registry import QUERIES
+    from dumbo_spark.session import get_session
+
+    unknown = [n for n in args.queries if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown query: {', '.join(unknown)}")
+    if args.runs < 1:
+        raise SystemExit("--runs must be at least 1")
+    spark = get_session("dumbo_spark_profile")
+    warm_up(spark)
+    print(f"{'query':38s} {'median':>7s} {'runs':>24s} {'jobs':>5s} {'stages':>6s}")
+    for name in args.queries:
+        m = measure(spark, QUERIES[name].fn, args.sf_dir, args.runs)
+        runs = "/".join(f"{s:.2f}" for s in m.samples)
+        print(f"{name:38s} {m.median:7.2f} {runs:>24s} {m.jobs:5d} {m.stages:6d}")
     return 0
 
 
@@ -339,13 +365,21 @@ def build_parser() -> argparse.ArgumentParser:
     so.add_argument("--partitions", type=int, default=32)
     so.set_defaults(fn=cmd_sort)
 
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     pl = sub.add_parser("plan", help="physical-plan audit for a registered query")
     pl.add_argument("query")
-    pl.add_argument("--sf-dir", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    pl.add_argument("--sf-dir", default=sf_dir)
     pl.add_argument("--verbose", action="store_true",
                     help="also print the full formatted physical plan")
     pl.set_defaults(fn=cmd_plan)
+
+    pr = sub.add_parser(
+        "profile", help="time registered queries; count their Spark jobs and stages"
+    )
+    pr.add_argument("queries", nargs="+", metavar="query")
+    pr.add_argument("--sf-dir", default=sf_dir)
+    pr.add_argument("--runs", type=int, default=3)
+    pr.set_defaults(fn=cmd_profile)
 
     dqp = sub.add_parser(
         "dq", help="data-quality expectation report (exit 1 on violations)"

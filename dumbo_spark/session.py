@@ -10,6 +10,7 @@ hand-set reducer counts (dumbo's -numreducetasks).
 from __future__ import annotations
 
 import contextlib
+import glob
 import hashlib
 import logging
 import os
@@ -261,20 +262,31 @@ def _empty_conf_dir():
             os.environ["SPARK_CONF_DIR"] = before
 
 
+def _error_file(cache: str) -> str:
+    """JVM option that writes a crash log into the cache, not the caller's cwd."""
+    return f"-XX:ErrorFile={os.path.join(cache, 'hs_err_pid%p.log')}"
+
+
 def _launch(app_name: str, cpus: int, archive: _Archive) -> tuple[SparkSession, str]:
     """Start (or join) the session; with an archive, fall back to a
     plain launch once if the JVM does not come up with it."""
     if archive.path is None:
         return _builder(app_name, cpus).getOrCreate(), archive.note
+    cache = os.path.dirname(archive.path)
+    started = time.time()
     try:
         with _empty_conf_dir():
-            builder = _builder(app_name, cpus, f"-XX:SharedArchiveFile={archive.path}")
+            builder = _builder(app_name, cpus,
+                               f"-XX:SharedArchiveFile={archive.path} {_error_file(cache)}")
             return builder.getOrCreate(), archive.note
     except PySparkRuntimeError:
         if SparkContext._gateway is not None:  # the JVM is up: not the archive's doing
             raise
     _remove(archive.path)
-    note = f"cds archive off: the JVM did not start with {archive.path}, deleted it"
+    crashes = [p for p in glob.glob(os.path.join(cache, "hs_err_pid*.log"))
+               if os.path.getmtime(p) >= started]
+    crash = f" (crash log: {max(crashes, key=os.path.getmtime)})" if crashes else ""
+    note = f"cds archive off: the JVM did not start with {archive.path}{crash}, deleted it"
     return _builder(app_name, cpus).getOrCreate(), note
 
 
@@ -334,7 +346,8 @@ def _dump_archive(path: str, cpus: int) -> None:
 
     from pyspark.sql import functions as F
 
-    spark = _builder("dumbo_spark_cds", cpus, f"-XX:ArchiveClassesAtExit={path}").getOrCreate()
+    spark = _builder("dumbo_spark_cds", cpus, f"-XX:ArchiveClassesAtExit={path} "
+                     f"{_error_file(os.path.dirname(path))}").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).agg(F.sum("id")).collect()
 

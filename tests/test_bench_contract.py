@@ -172,6 +172,10 @@ def test_emit_line_prints_exactly_the_fixed_row_set():
     parsed = json.loads(line)
     expect = {n for n in bench.PRINTED if n in timings}
     assert set(parsed["queries"]) == expect
+    # the metric names the printed subset of the summed queries
+    assert f"{len(timings)} queries ({len(expect)} of {len(timings)} printed)" in (
+        parsed["metric"]
+    )
     # every PRINTED name (core_suite aside, a synthetic row) is a real
     # headline query, so the printed set can never silently shrink
     assert expect == set(bench.PRINTED) - {"core_suite"}
@@ -188,7 +192,7 @@ def test_emit_line_reports_core_suite_outside_the_headline_total():
     assert parsed["value"] == 3.0
     assert parsed["core_suite_sec"] == 40.0
     assert parsed["queries"]["core_suite"] == 40.0
-    assert "2 queries" in parsed["metric"]
+    assert "2 queries (2 of 2 printed)" in parsed["metric"]
 
 
 def test_emit_line_shrinks_by_precision_never_by_dropping_rows():

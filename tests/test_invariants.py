@@ -72,6 +72,10 @@ ALLOWED_MATERIALIZE_SITES = {
         "batched BPE: .limit(batch_k) candidates per round — batch_k "
         "rows/round"
     ),
+    ("profiling.py", "warm_up"): (
+        "JVM warm-up before timed runs: collects one fixed row, the sum "
+        "of spark.range(1_000_000)"
+    ),
     ("session.py", "_dump_archive"): (
         "CDS archive warm-up in its own child process: fixed spark.range "
         "inputs of at most 1,000 rows"

@@ -161,8 +161,22 @@ def test_cli_plan_subcommand():
     r = _cli("plan", "group_sum")
     assert r.returncode == 0, r.stderr[-1500:]
     assert "exchanges:" in r.stdout and "python_evals: 0" in r.stdout
+    assert "wholestage_codegen_spans:" in r.stdout and "bnl_joins: 0" in r.stdout
     bad = _cli("plan", "no_such_query")
     assert bad.returncode != 0
+
+
+def test_cli_profile_subcommand(sf_dir):
+    r = _cli("profile", "group_sum", "--sf-dir", sf_dir, "--runs", "2")
+    assert r.returncode == 0, r.stderr[-1500:]
+    header, row = r.stdout.splitlines()[-2:]
+    assert header.split() == ["query", "median", "runs", "jobs", "stages"]
+    name, median, runs, jobs, stages = row.split()
+    assert name == "group_sum" and float(median) > 0
+    assert len(runs.split("/")) == 2
+    assert int(jobs) > 0 and int(stages) >= int(jobs)
+    bad = _cli("profile", "group_sum", "no_such_query")
+    assert bad.returncode != 0 and "no_such_query" in bad.stderr
 
 
 def test_cli_dq_subcommand():

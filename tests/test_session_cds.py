@@ -142,7 +142,8 @@ def _dead_pid() -> int:
 
 def test_a_jvm_that_fails_with_the_archive_is_retried_without_it(cache, monkeypatch):
     """The launch is retried once without the archive, the archive is
-    deleted, and SPARK_CONF_DIR is restored either way."""
+    deleted, SPARK_CONF_DIR is restored either way, and the note names
+    the crash log the JVM wrote into the cache."""
     monkeypatch.setattr(SparkContext, "_gateway", None)
     monkeypatch.setenv("SPARK_CONF_DIR", "/nonexistent/conf")
     cache.mkdir(parents=True)
@@ -157,6 +158,7 @@ def test_a_jvm_that_fails_with_the_archive_is_retried_without_it(cache, monkeypa
         def getOrCreate(self):
             launches.append((self.java_options, os.environ["SPARK_CONF_DIR"]))
             if "SharedArchiveFile" in self.java_options:
+                (cache / "hs_err_pid7.log").write_text("SIGBUS")
                 raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED",
                                           messageParameters={})
             return "session"
@@ -165,16 +167,18 @@ def test_a_jvm_that_fails_with_the_archive_is_retried_without_it(cache, monkeypa
                         lambda app, cpus, java_options="": Builder(java_options))
     spark, note = session._launch("t", 2, session._Archive(str(archive), "used"))
     assert spark == "session" and "did not start" in note
+    assert f"crash log: {cache / 'hs_err_pid7.log'}" in note
     assert not archive.exists()
-    assert launches == [(f"-XX:SharedArchiveFile={archive}", str(cache / "conf")),
+    error_file = f"-XX:ErrorFile={cache / 'hs_err_pid%p.log'}"
+    assert launches == [(f"-XX:SharedArchiveFile={archive} {error_file}", str(cache / "conf")),
                         ("", "/nonexistent/conf")]
     assert os.environ["SPARK_CONF_DIR"] == "/nonexistent/conf"
 
 
 def _fresh_session(xdg: str, java_options: str = "") -> subprocess.CompletedProcess:
     """Start a session in a new process against the cache under ``xdg``,
-    working in ``xdg`` (a crashing JVM leaves its hs_err log in the
-    working dir); its stdout ends with the start-up log line and
+    working in ``xdg`` (so a crash log left in the working dir stays
+    inside the test's tmp dir); its stdout ends with the start-up log line and
     ``range(10).count()``."""
     env = {k: v for k, v in os.environ.items()
            if not k.startswith("PYSPARK_GATEWAY_") and k != "SPARK_CONF_DIR"}
@@ -218,7 +222,8 @@ def test_damaged_archive_degrades_to_the_plain_start_up(tmp_path, monkeypatch, d
     working session, and neither is kept: garbage is recognised by its
     header; a truncated archive keeps a valid header, and JDK 17 then
     dies mapping it (SIGBUS, -Xshare:auto does not save it), so the
-    launch is retried without it. The next session rebuilds."""
+    launch is retried without it. The next session rebuilds. The dying
+    JVM's crash log goes to the cache, not the working directory."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     base, why = session._archive_base()
@@ -240,3 +245,6 @@ def test_damaged_archive_degrades_to_the_plain_start_up(tmp_path, monkeypatch, d
     assert count == "10"
     assert note.endswith("deleted it"), note
     assert not os.path.exists(f"{base}.jsa")
+    assert not list(tmp_path.glob("hs_err_pid*.log"))
+    if damage == "truncated":
+        assert "crash log: " + os.path.dirname(base) in note, note

@@ -1,7 +1,9 @@
 """Session-conf A/B harness (optimization rounds): run a representative
 query subset under conf overrides supplied as KEY=VALUE args, print the
-per-query medians and total. Fresh JVM per invocation — run once per
-variant and compare totals.
+per-query medians and total. Each query is timed through
+``dumbo_spark.profiling.measure()`` (noop sink, caches and pins released
+after every run). Fresh JVM per invocation — run once per variant and
+compare totals.
 
     python tools/ab_confs.py                              # baseline
     python tools/ab_confs.py spark.sql.join.preferSortMergeJoin=false
@@ -10,9 +12,7 @@ variant and compare totals.
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,21 +44,14 @@ def main() -> None:
     if not can_set:
         sys.exit(2)
 
+    from dumbo_spark.profiling import measure, warm_up
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.session import release_persistent_rdds
 
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    timings = {}
-    for name in SUBSET:
-        q = QUERIES[name]
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(samples), 3)
-        spark.catalog.clearCache()
-        release_persistent_rdds(spark)
+    warm_up(spark)
+    timings = {
+        name: round(measure(spark, QUERIES[name].fn, sf_dir, runs).median, 3)
+        for name in SUBSET
+    }
     for n, s in timings.items():
         print(f"{n:28s} {s:7.3f}")
     print(f"TOTAL {sum(timings.values()):.3f}  overrides={overrides}")

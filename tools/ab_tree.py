@@ -11,11 +11,13 @@ host (same-code driver runs differ per-query by up to 5.4x).
 Each round runs both trees, one fresh process each, and alternates
 which tree goes first so a drifting host does not favour either; a
 process builds the standard session (SPARK_GRAFT_CPUS, default: the
-CPUs this process may use), warms the JVM, and times the
-query median-of-3 with the noop sink, clearing caches and persistent
-RDDs between runs (true per-run cold cost — the adjudication
-discipline, not the sweep's). Prints a per-round table plus medians
-and a verdict.
+CPUs this process may use), warms the JVM, and times the query
+median-of-3 through ``dumbo_spark.profiling.measure()`` (noop sink,
+caches and pins released after every run). Both children load
+``profiling.py`` by file path from the tree this script runs from, so
+the measuring code is the same on both sides and a tree without
+``profiling.py`` can still be measured. Prints a per-round table plus
+medians and a verdict.
 """
 
 from __future__ import annotations
@@ -26,32 +28,31 @@ import statistics
 import subprocess
 import sys
 
+_HERE_TREE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PROFILING = os.path.join(_HERE_TREE, "dumbo_spark", "profiling.py")
+
 _CHILD = r"""
-import json, os, statistics, sys, time
-tree = sys.argv[1]; name = sys.argv[2]
+import importlib.util, json, os, sys
+tree, name, profiling_py = sys.argv[1:4]
 sys.path.insert(0, tree)
+spec = importlib.util.spec_from_file_location("_ab_profiling", profiling_py)
+profiling = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(profiling)
 from dumbo_spark.registry import QUERIES
-from dumbo_spark.session import get_session, release_persistent_rdds
+from dumbo_spark.session import get_session
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 spark = get_session("ab_tree", cpus=cpus)
-spark.range(1_000_000).selectExpr("sum(id)").collect()
-samples = []
-for _ in range(3):
-    t0 = time.perf_counter()
-    QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    samples.append(round(time.perf_counter() - t0, 3))
-    spark.catalog.clearCache()
-    release_persistent_rdds(spark)
-print(json.dumps({"median": statistics.median(samples), "runs": samples}))
+profiling.warm_up(spark)
+m = profiling.measure(spark, QUERIES[name].fn, sf_dir, 3)
+print(json.dumps({"median": round(m.median, 3),
+                  "runs": [round(s, 3) for s in m.samples]}))
 """
 
 
 def run_one(tree: str, name: str) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", _CHILD, tree, name],
+        [sys.executable, "-c", _CHILD, tree, name, _PROFILING],
         capture_output=True,
         text=True,
         timeout=900,
@@ -69,7 +70,7 @@ def main() -> None:
     old_tree = sys.argv[1]
     name = sys.argv[2]
     rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 5
-    new_tree = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    new_tree = _HERE_TREE
     olds, news = [], []
     print(f"query={name} old={old_tree} new={new_tree} rounds={rounds}")
     print(f"loadavg at start: {os.getloadavg()}")

@@ -19,14 +19,13 @@ def main() -> None:
     outdir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
     from dumbo_spark.plans.explain import _formatted
     from dumbo_spark.registry import QUERIES
     from dumbo_spark.session import get_session, release_persistent_rdds
 
     os.makedirs(outdir, exist_ok=True)
-    spark = get_session("dump_plans", cpus=cpus)
+    spark = get_session("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         if name not in QUERIES:

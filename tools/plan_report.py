@@ -198,7 +198,7 @@ def main() -> None:
     from dumbo_spark.registry import QUERIES
     from dumbo_spark.session import get_session
 
-    spark = get_session("plan_report", cpus=8)
+    spark = get_session("plan_report")
     print("# PLANS — physical-plan audit of every registered query\n")
     print(f"Generated against `{SF_DIR}`. Columns: shuffle exchanges, "
           "broadcast/sort-merge joins, whole-stage-codegen spans, Python "

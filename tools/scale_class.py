@@ -5,6 +5,12 @@ run, wall-clock AND the per-stage shuffle-write series — the r12
 shuffle diet changed the constants, so the scale class needs re-pinning
 with shuffle bytes, not just seconds.
 
+Each query is timed once through ``dumbo_spark.profiling.measure()``
+(noop sink: the full plan runs, so Catalyst cannot prune the final step
+the way it can under ``count()``, which dropped dedup_substring_trim's
+whole trim join); its rows are counted afterwards,
+untimed and outside the stage window.
+
 Stage metrics come from the Spark UI's REST API (the stable public
 surface; AppStatusStore's scala-default-arg signatures aren't callable
 through py4j), so the session runs with SPARK_GRAFT_UI=true. Stages
@@ -78,37 +84,20 @@ def _completed_stages(spark) -> list[dict]:
         return json.load(r)
 
 
-def run_one(spark, name: str, sf_dir: str, noop: bool = False) -> dict:
-    """Time one query and attribute its completed stages.
-
-    ``noop=False`` (default, the historical method): time ``.count()``.
-    Fine for the iterative/ANN roster, whose work is aggregations and
-    checkpointed loops that a count cannot prune. ``noop=True``
-    (SCALE_CLASS_NOOP=1): time the full-materialization noop write —
-    REQUIRED for queries whose final step Catalyst can eliminate under
-    count() (measured: dedup_substring_trim's count() pruned the whole
-    trim to a 3-stage 0-shuffle token count, because count over a left
-    join with a unique-keyed, unreferenced right side drops the join).
-    Rows are then counted untimed afterwards."""
+def run_one(spark, name: str, sf_dir: str) -> dict:
+    """Time one query and attribute its completed stages."""
+    from dumbo_spark.profiling import measure
     from dumbo_spark.registry import QUERIES
     from dumbo_spark.session import release_persistent_rdds
 
     before = {s["stageId"] for s in _completed_stages(spark)}
-    df = QUERIES[name].fn(spark, sf_dir)
-    t0 = time.perf_counter()
-    if noop:
-        df.write.format("noop").mode("overwrite").save()
-    else:
-        rows = df.count()
-    wall = time.perf_counter() - t0
-    # stage attribution snapshot happens HERE, before any untimed
-    # follow-up count, so the noop path's metrics cover exactly the
-    # timed materialization
+    wall = measure(spark, QUERIES[name].fn, sf_dir, 1).samples[0]
     stages = [
         s for s in _completed_stages(spark) if s["stageId"] not in before
     ]
-    if noop:
-        rows = df.count()  # untimed, excluded from the stage window
+    rows = QUERIES[name].fn(spark, sf_dir).count()
+    spark.catalog.clearCache()
+    release_persistent_rdds(spark)
     stages.sort(key=lambda s: s["stageId"])
     # 3-decimal MB: the ANN family's per-stage shuffles are KB-scale
     # (5k embeddings x 64 floats), and 1-decimal rounding read 0.0
@@ -118,8 +107,6 @@ def run_one(spark, name: str, sf_dir: str, noop: bool = False) -> dict:
         for s in stages
         if s["shuffleWriteBytes"] > 0
     ]
-    spark.catalog.clearCache()
-    release_persistent_rdds(spark)
     return {
         "rows": rows,
         "sec": round(wall, 1),
@@ -138,9 +125,7 @@ def main() -> None:
         int(x)
         for x in os.environ.get("SCALE_CLASS_REPLS", "1,10,30").split(",")
     ]
-    spark = get_session(
-        "scale_class", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 16))
-    )
+    spark = get_session("scale_class")
     only_ann = os.environ.get("SCALE_CLASS_ONLY_ANN", "") == "1"
     iter_q = [] if only_ann else QUERIES_UNDER_TEST
     # SCALE_CLASS_QUERIES=a,b,c overrides the iterative set (still runs
@@ -162,9 +147,8 @@ def main() -> None:
             t0 = time.perf_counter()
             build(spark, repl=repl, out=sf_dir)
             print(f"# build x{repl}: {time.perf_counter()-t0:.1f}s", flush=True)
-        noop = os.environ.get("SCALE_CLASS_NOOP", "") == "1"
         for name in iter_q:
-            rec = run_one(spark, name, sf_dir, noop=noop)
+            rec = run_one(spark, name, sf_dir)
             results[name][repl] = rec
             print(f"# x{repl} {name}: {json.dumps(rec)}", flush=True)
         if not ann_q:

@@ -14,7 +14,7 @@ with a unique-keyed, otherwise-unreferenced right side, Catalyst
 eliminates that join under count() — the timing then under-reports the
 full materialization (measured: dedup_substring_trim count-pruned to a
 3-stage token count). Full-materialization scale timings live in
-SCALE.md's scale-class tables (tools/scale_class.py SCALE_CLASS_NOOP=1).
+SCALE.md's scale-class tables (tools/scale_class.py, noop sink).
 """
 
 from __future__ import annotations
@@ -68,7 +68,7 @@ def main() -> None:
     from dumbo_spark.registry import QUERIES
     from dumbo_spark.session import get_session
 
-    spark = get_session("scale_smoke", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 16)))
+    spark = get_session("scale_smoke")
     t0 = time.perf_counter()
     build(spark)
     print(f"# build: {time.perf_counter()-t0:.1f}s  ({REPL}× {BASE_SF} → {OUT})")
