@@ -727,9 +727,8 @@ def build_record(
     }
     # VERDICT r15 Next #2c: per-run samples for EVERY query, in run
     # order. Caches and pins are released after every run, so no run
-    # reads another's cache (until that release moved into measure(),
-    # runs 2-3 read run 1's and the median hid containment_join's
-    # 13-16s cost); run 1 still pays first-execution codegen.
+    # reads another's cache; run 1 still pays first-execution codegen,
+    # which a median of 3 hides and the raw samples show.
     record["samples"] = {
         n: [round(s, 3) for s in all_samples[n]] for n in sorted(all_samples)
     }
@@ -772,7 +771,8 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.session import get_session, release_persistent_rdds
+    from dumbo_spark.session import get_session
+    from dumbo_spark.session import release_persistent_rdds
 
     names = sorted(QUERIES) if full else [n for n in HEADLINE if n in QUERIES]
 
