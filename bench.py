@@ -428,17 +428,15 @@ def core_suite_names(registered: set[str]) -> list[str]:
     return sorted(n for n, r in m["excluded"].items() if r == _CORE_REASON)
 
 
-def core_suite_pass(
-    spark, queries, sf_dir: str, release_persistent_rdds
-) -> tuple[float, dict[str, float]]:
+def core_suite_pass(spark, queries, sf_dir: str) -> tuple[float, dict[str, float]]:
     """One timed noop-write pass over every sub-second-core name.
 
     Single pass (not median-of-3): the row's job is regression
     VISIBILITY across ~50 fast operators, and first-execution codegen
     is part of what a regression would inflate; the per-name detail
     ships in BENCH.json's core_suite_detail so a moved total can be
-    pinpointed without re-running the sweep. ``measure()`` does the
-    releasing; ``release_persistent_rdds`` is unused."""
+    pinpointed without re-running the sweep. ``measure()`` releases
+    caches and pins after every run."""
     detail = {
         n: round(measure(spark, queries[n].fn, sf_dir, 1).samples[0], 3)
         for n in core_suite_names(set(queries))
@@ -559,7 +557,6 @@ def adjudicate(
     sf_dir: str,
     timings: dict[str, float],
     close_map: dict[str, float] | None,
-    release_persistent_rdds,
     extra_runners: dict | None = None,
 ) -> dict:
     """Self-adjudicate window contention (VERDICT r13 Next #1).
@@ -578,8 +575,8 @@ def adjudicate(
     Returns {"calib_spark_sec": float, "rows": {name: {...}}}; empty
     rows dict when nothing breached or no close baseline exists.
 
-    Re-runs go through ``measure()``, which does the releasing;
-    ``release_persistent_rdds`` is unused.
+    Re-runs go through ``measure()``, which releases caches and pins
+    after every run.
 
     Baseline note: BENCH_CLOSE.json is whatever close is committed at
     run time — for the driver's sweep that is THIS round's builder
@@ -772,7 +769,6 @@ def main() -> None:
 
     from dumbo_spark.registry import QUERIES
     from dumbo_spark.session import get_session
-    from dumbo_spark.session import release_persistent_rdds
 
     names = sorted(QUERIES) if full else [n for n in HEADLINE if n in QUERIES]
 
@@ -807,14 +803,12 @@ def main() -> None:
     core_runner = None
     if not full:
         try:
-            core_total, core_detail = core_suite_pass(
-                spark, QUERIES, sf_dir, release_persistent_rdds
-            )
+            core_total, core_detail = core_suite_pass(spark, QUERIES, sf_dir)
             timings["core_suite"] = core_total
             all_samples["core_suite"] = [core_total]
 
             def core_runner() -> None:
-                core_suite_pass(spark, QUERIES, sf_dir, release_persistent_rdds)
+                core_suite_pass(spark, QUERIES, sf_dir)
         except Exception as exc:  # the suite must never fail the bench
             print(f"core_suite failed: {exc!r}", file=sys.stderr)
 
@@ -830,7 +824,6 @@ def main() -> None:
             sf_dir,
             timings,
             load_close_queries(here, sf),
-            release_persistent_rdds,
             extra_runners={"core_suite": core_runner} if core_runner else None,
         )
     except Exception as exc:  # adjudication must never fail the bench

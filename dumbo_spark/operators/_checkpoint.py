@@ -1,39 +1,43 @@
-"""Shared lineage-truncation helpers for the iterative operators.
+"""The one lineage cut every operator uses, and its eager release.
 
-connected_components, pagerank, and the k-core/k-truss family
-(operators/dedup.py, operators/graph.py) all replace a per-round
-label/rank table every iteration; these helpers release the previous
-round's storage eagerly and keep concurrent durable runs from
-overwriting each other's scratch files. Promoted out of dedup.py in
-r13 (ADVICE r12: graph.py importing an underscore-private symbol from
-dedup.py coupled the modules and would break silently on a rename).
-
-LAZY CORPUS-WIDTH CHECKPOINT CONTRACT (ADVICE r15). Many multi-branch
-operators pin a shared subtree with ``localCheckpoint(eager=False)``
+:func:`pin` is the only place the engine calls ``localCheckpoint`` or
+``checkpoint``; ``tests/test_invariants.py`` fails on any other call.
+Operators pin for two reasons: the iterative loops
+(connected_components, pagerank, the k-core/k-truss family in
+operators/graph.py) cut each round's lineage so plan size stays
+constant, and many multi-branch operators pin a shared subtree lazily
 so N consuming branches evaluate the tokenize/fingerprint pass once
-instead of N times (guide §2.4). Two caveats apply to EVERY such site,
-not just the iterative ones documented on connected_components:
+instead of N times (guide §2.4). dumbo chained iterations through temp
+paths (``Job.additer``); a pin is that hand-off.
 
-- **Storage lifetime.** The checkpoint's blocks live in executor
-  storage until the returned DataFrame is garbage-collected (or the
-  caller runs ``session.release_persistent_rdds``, which the bench and
-  the test harness both do between queries). A long-lived host
-  application that holds many results should release explicitly;
-  within one query's evaluation the pin is exactly the point.
-- **Fault tolerance.** ``localCheckpoint`` has NO recompute path: an
-  executor loss after materialization fails the query (it cannot be
-  rebuilt from lineage). That is the right local-mode/bench trade —
-  one evaluation instead of N full corpus passes — but a cluster run
-  where executor loss must be survivable should use reliable
-  checkpoints (``spark.checkpoint.dir``) or persist-to-storage
-  instead; the operators take DataFrames, so callers can materialize
-  upstream and pass the re-read frame if they need durability.
+Two caveats apply to EVERY pin site:
+
+- **Storage lifetime.** A pin lives until the returned DataFrame is
+  garbage-collected or the caller runs ``session.release_persistent_rdds``
+  (the bench and the test harness both do between queries). A
+  long-lived host application that holds many results should release
+  explicitly; within one query's evaluation the pin is exactly the
+  point. The iterative loops release each stale round at once through
+  :func:`_release_local_checkpoint`.
+- **Fault tolerance.** With no checkpoint directory a pin is a
+  ``localCheckpoint``: its blocks sit in executor storage and have NO
+  recompute path, so losing an executor after materialization fails
+  the query. Set ``spark.checkpoint.dir`` (or call
+  ``sparkContext.setCheckpointDir``) and every pin becomes a reliable
+  ``checkpoint`` written to that directory, which survives executor
+  loss. A reliable pin costs one extra job per pin, the write (a probe
+  that ran 5 jobs with local pins ran 6 with reliable ones), which
+  evaluates the pinned frame a second time because Spark does not cache
+  it; its files stay until
+  ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on and the
+  frame is garbage-collected. ``.persist()`` sites are
+  caches, not cuts: a lost block is recomputed from lineage, which
+  ends at a pin.
 """
 
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame
 
@@ -44,8 +48,21 @@ _log = logging.getLogger(__name__)
 _release_fallback_warned = False
 
 
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: a reliable ``checkpoint`` when the session
+    has a checkpoint directory, else a ``localCheckpoint``.
+
+    ``eager=False`` materializes the pin with the first action over
+    the returned frame, in that action's job. The choice reads a
+    setting Spark already has, so there is no engine option for it.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
+
+
 def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint'd DataFrame's storage blocks NOW.
+    """Free a pinned DataFrame's storage blocks NOW.
 
     The iterative loops replace their label/rank table every round;
     the previous round's checkpoint becomes garbage the moment the new
@@ -53,14 +70,16 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     py4j detach + JVM GC get around to them — in a long shared session
     (the driver's correctness harness, a user notebook) those stale
     rounds accumulate executor memory (measured: a 4× slowdown of an
-    iterative query after two others ran in the same session).
-    Best-effort by design: it reaches the plan's LogicalRDD through
-    internal accessors, so any API drift just falls back to GC-timed
-    release rather than failing the query — but that fallback is now
-    OBSERVABLE (VERDICT r12 Next #6): the first failure logs a warning
-    so a Spark upgrade that silently degrades every iterative operator
-    back to GC-timed release shows up in bench logs instead of only as
-    unexplained memory inflation.
+    iterative query after two others ran in the same session). A
+    reliable pin holds no blocks, so this frees nothing for it; its
+    files stay as the module docstring says. Best-effort by design: it
+    reaches the plan's LogicalRDD through internal accessors, so any
+    API drift just falls back to GC-timed release rather than failing
+    the query — but that fallback is now OBSERVABLE (VERDICT r12 Next
+    #6): the first failure logs a warning so a Spark upgrade that
+    silently degrades every iterative operator back to GC-timed
+    release shows up in bench logs instead of only as unexplained
+    memory inflation.
     """
     global _release_fallback_warned
     try:
@@ -78,33 +97,3 @@ def _release_local_checkpoint(df: DataFrame) -> None:
         else:
             _log.debug("eager localCheckpoint release failed again: %s", exc)
 
-
-def _claim_run_dir(durable_dir: str) -> str:
-    """Reserve a fresh ``run-N`` subdirectory under ``durable_dir``.
-
-    Atomic via ``os.makedirs(exist_ok=False)`` for local/posix paths;
-    two invocations sharing a durable_dir get disjoint scratch trees,
-    so one run can never overwrite files backing another run's lazily
-    evaluated result.
-
-    Local filesystems only: for URI paths (hdfs://, s3a://, ...) a
-    driver-local makedirs would create a stray ``./hdfs:/...`` dir and
-    provide zero mutual exclusion on the real filesystem, so those are
-    rejected — callers on shared storage must pass distinct
-    durable_dirs per run (directory-create is not a lock on object
-    stores, and multi-driver HDFS setups need a real coordinator).
-    """
-    if "://" in durable_dir:
-        raise ValueError(
-            f"_claim_run_dir requires a local path, got {durable_dir!r}; "
-            "on shared filesystems pass a distinct durable_dir per run"
-        )
-    base = durable_dir.rstrip("/")
-    n = 0
-    while True:
-        candidate = f"{base}/run-{n}"
-        try:
-            os.makedirs(candidate, exist_ok=False)
-            return candidate
-        except FileExistsError:
-            n += 1

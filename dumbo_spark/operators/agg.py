@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dumbo_spark.functions.numeric import dmoney, dsum
+from dumbo_spark.operators._checkpoint import pin
 
 
 def group_sum(lineitem: DataFrame) -> DataFrame:
@@ -476,16 +477,14 @@ def _weighted_cum_sweep(lineitem: DataFrame) -> DataFrame:
         F.col("l_orderkey").asc(),
         F.col("l_linenumber").asc(),
     ]
-    # localCheckpoint pins ONE realization of the range shuffle before
+    # pin() fixes ONE realization of the range shuffle before
     # the offsets/data branch split — without it the two branches can
     # each sample their own boundaries when pruning defeats
     # ReuseExchange, and the offsets silently describe the wrong
     # partitions (the round-9 global_rank fix; full mechanism in
     # topk.global_rank).
-    r = (
-        li.repartitionByRange(parts, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    r = pin(
+        li.repartitionByRange(parts, *order).withColumn("_pid", F.spark_partition_id())
     )
     pc = r.groupBy("_pid", "l_returnflag").agg(F.sum("_q").alias("_w"))
     w_off = (
@@ -551,13 +550,12 @@ def grouped_exact_percentiles(
         F.col("_v").asc(),
         *[F.col(c).asc() for c in tiebreak_cols],
     ]
-    # localCheckpoint: pin one realization of the range shuffle before
+    # pin one realization of the range shuffle before
     # the offsets/data branch split (round-9 global_rank fix — see
     # topk.global_rank for the full dual-exchange mechanism).
-    r = (
+    r = pin(
         base.repartitionByRange(parts, *order)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
     )
     pc = r.groupBy("_pid", group_col).agg(F.count("*").alias("_c"))
     w_off = (

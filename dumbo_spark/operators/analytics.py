@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dumbo_spark.functions.numeric import dmoney, dsum
+from dumbo_spark.operators._checkpoint import pin
 
 
 def _revenue() -> F.Column:
@@ -675,9 +676,7 @@ def revenue_share_parts(lineitem: DataFrame, threshold_bp: int = 7) -> DataFrame
     """
     # lazy checkpoint: referenced by the total scalar AND the final
     # projection — one fact-table aggregation instead of two (r15)
-    per_part = lineitem.groupBy("l_partkey").agg(
-        F.sum(_revenue()).alias("_rev")
-    ).localCheckpoint(eager=False)
+    per_part = pin(lineitem.groupBy("l_partkey").agg(F.sum(_revenue()).alias("_rev")))
     total = per_part.agg(F.sum("_rev").alias("_tot"))
     share = F.col("_rev").cast("double") / F.col("_tot").cast("double")
     return (
@@ -911,15 +910,17 @@ def decile_lift_table(events: DataFrame, min_purchases: int = 14) -> DataFrame:
     """
     # lazy checkpoint: referenced by the totals scalar AND the rank pass
     # — one fact-table aggregation instead of two (r15 optimization)
-    per_user = events.groupBy("user_id").agg(
-        F.count("*").alias("score"),
-        (
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            >= min_purchases
+    per_user = pin(
+        events.groupBy("user_id").agg(
+            F.count("*").alias("score"),
+            (
+                F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+                >= min_purchases
+            )
+            .cast("int")
+            .alias("converted"),
         )
-        .cast("int")
-        .alias("converted"),
-    ).localCheckpoint(eager=False)
+    )
     from dumbo_spark.operators.sampling import exact_global_rank
 
     total = per_user.agg(
@@ -1151,7 +1152,7 @@ def order_cadence(orders: DataFrame) -> DataFrame:
     # size-estimated-join class where a stats-less checkpoint loses an
     # AQE broadcast (the doc_perplexity revert) — so the reuse is pure
     # win; materialization rides the counts branch's own job.
-    gaps = (
+    gaps = pin(
         orders.select("o_custkey", "o_orderdate", "o_orderkey")
         .withColumn(
             "gap_days",
@@ -1160,7 +1161,6 @@ def order_cadence(orders: DataFrame) -> DataFrame:
             ).cast("double"),
         )
         .where(F.col("gap_days").isNotNull())
-        .localCheckpoint(eager=False)
     )
     counts = gaps.agg(
         F.countDistinct("o_custkey").alias("n_customers_multi"),
@@ -1198,16 +1198,12 @@ def churn_risk_buckets(orders: DataFrame, bucket_days: int = 30) -> DataFrame:
     # checkpointed and the global anchor derives from THEM (max of
     # per-customer maxes ≡ global max) instead of a second orders scan;
     # hist is checkpointed because the share scalar re-references it
-    last = orders.groupBy("o_custkey").agg(
-        F.max("o_orderdate").alias("_last")
-    ).localCheckpoint(eager=False)
+    last = pin(orders.groupBy("o_custkey").agg(F.max("o_orderdate").alias("_last")))
     mx = last.agg(F.max("_last").alias("_mx"))
     bucketed = last.crossJoin(F.broadcast(mx)).select(
         F.floor(F.datediff("_mx", "_last") / F.lit(bucket_days)).alias("bucket")
     )
-    hist = bucketed.groupBy("bucket").agg(
-        F.count("*").alias("n_customers")
-    ).localCheckpoint(eager=False)
+    hist = pin(bucketed.groupBy("bucket").agg(F.count("*").alias("n_customers")))
     total = hist.agg(F.sum("n_customers").alias("_n"))
     return (
         hist.crossJoin(F.broadcast(total))
@@ -1242,9 +1238,9 @@ def top_percent_customers(orders: DataFrame, pct: float = 1.0) -> DataFrame:
 
     # lazy checkpoint: referenced by the rank pass AND the share scalar
     # — one fact-table aggregation instead of two (r15 optimization)
-    per = orders.groupBy("o_custkey").agg(
-        F.sum(dmoney("o_totalprice")).alias("_rev")
-    ).localCheckpoint(eager=False)
+    per = pin(
+        orders.groupBy("o_custkey").agg(F.sum(dmoney("o_totalprice")).alias("_rev"))
+    )
     ranked = global_rank(
         per, [F.col("_rev").desc(), F.col("o_custkey").asc()]
     )

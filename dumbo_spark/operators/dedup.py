@@ -28,10 +28,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from dumbo_spark.functions.text import ngrams, tokens
-from dumbo_spark.operators._checkpoint import (  # shared with graph.py
-    _claim_run_dir,
-    _release_local_checkpoint,
-)
+from dumbo_spark.operators._checkpoint import _release_local_checkpoint, pin
 
 #: MinHash parameters: k = bands × rows signature components.
 MINHASH_K = 32
@@ -254,7 +251,6 @@ def _solve_on_driver(
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    durable_dir: str | None = None,
     chain: int = 2,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
@@ -307,10 +303,9 @@ def connected_components(
     node to its component's minimum, so its first identity round is
     R + 1 (the argument given for ``chain`` above) and it raises exactly
     when R >= max_iter; the driver path computes R and raises then too.
-    Every other input (more edges, a null id, another id type, or any
-    ``durable_dir`` run, whose restart contract needs the files) runs
-    the loop below over the same checkpointed edges, so a large graph
-    still builds its edges once. Median wall time including a noop
+    Every other input (more edges, a null id or another id type) runs
+    the loop below over the same pinned edges, so a large graph still
+    builds its edges once. Median wall time including a noop
     write, driver path vs loop, on 4 cores (``local[4]``) over seeded
     random graphs with as many nodes as edges: 10³ edges 0.18 vs 3.95 s,
     10⁴ 0.20 vs 4.64 s, 10⁵ 1.08 vs 9.34 s, 10⁶ 12.2 vs 59.6 s. There is
@@ -319,43 +314,22 @@ def connected_components(
     before falling through: 19.2 vs 19.7 s medians on 3·10⁵ edges,
     within noise).
 
-    Durability contract: with ``durable_dir=None`` truncation uses
-    ``localCheckpoint()`` — executor-memory blocks, fast, but an
-    executor loss mid-run kills the job (acceptable in local mode /
-    tests). On a real cluster pass ``durable_dir`` (HDFS/S3 path): each
-    round's labels are round-tripped through parquet (alternating
-    subpaths, exactly dumbo's Job.additer temp-path discipline), so the
-    run survives executor loss and restarts from the last round's
-    files. The label table is one row per edge-touched node — tiny next
-    to the corpus — so the per-round write is cheap.
-
-    Each invocation claims its own ``run-N`` subdirectory under
-    ``durable_dir``, and the final labels are materialized to a
-    ``labels_final`` path before returning — so two runs sharing a
-    durable_dir never collide, and the returned DataFrame is backed by
-    files no later round (or later run) overwrites.
+    Durability contract: the input edges and each chunk's labels are
+    cut by :func:`~dumbo_spark.operators._checkpoint.pin`, dumbo's
+    Job.additer hand-off. With ``spark.checkpoint.dir`` set each cut is
+    a reliable checkpoint, so a run survives executor loss, at one
+    write job more per pin; without it the cuts are
+    ``localCheckpoint`` blocks, fast, but an executor loss mid-run
+    kills the job. The label table is one row per edge-touched node —
+    tiny next to the corpus — so the per-round write is cheap. Every
+    checkpoint gets its own ``rdd-N`` directory, so concurrent runs
+    never share files.
 
     edges: (doc_a, doc_b) undirected. Returns (doc_id, cluster_id)
     where cluster_id = min doc_id of the component.
     """
     if chain < 1:
         raise ValueError(f"chain must be >= 1, got {chain}")
-    if durable_dir is not None:
-        run_dir = _claim_run_dir(durable_dir)
-
-    def truncate(df: DataFrame, rnd: int) -> DataFrame:
-        if durable_dir is None:
-            # LAZY checkpoint: the convergence count below is a FULL
-            # count (no limit) and is the first action over the frame,
-            # so it materializes every partition of the checkpoint in
-            # the same job — one job per round instead of the old
-            # eager-checkpoint job + count job (guide §1.2: per-round
-            # driver actions are pure overhead at every scale).
-            return df.localCheckpoint(eager=False)
-        path = f"{run_dir}/labels_{rnd % 2}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
     # TRUNCATE the edge lineage, don't just persist it: with persist the
     # (possibly enormous — e.g. a PPJoin) edge-construction subplan stays
     # embedded in every round's logical plan and Catalyst re-optimizes it
@@ -363,16 +337,9 @@ def connected_components(
     # (the same finding as the triangle census, SCALE.md). The INPUT list
     # is checkpointed (half the symmetric table) so the construction runs
     # exactly once; the adjacency below is derived from the cached scan.
-    # Durable runs round-trip through the run dir so the restart contract
-    # holds for the input too, not just the labels.
-    if durable_dir is None:
-        # lazy: materialized by the adjacency persist-count below in the
-        # same job chain (no standalone checkpoint job)
-        e0 = edges.select("doc_a", "doc_b").localCheckpoint(eager=False)
-    else:
-        edges_path = f"{run_dir}/edges"
-        edges.select("doc_a", "doc_b").write.mode("overwrite").parquet(edges_path)
-        e0 = edges.sparkSession.read.parquet(edges_path)
+    # Lazy: materialized by the driver path's probe or the adjacency
+    # persist-count below (no standalone checkpoint job).
+    e0 = pin(edges.select("doc_a", "doc_b"))
     # explode(array(ab, ba)) symmetrization: one scan of the e0
     # checkpoint instead of one per union branch (r15; the adjacency
     # below still repartition+persists exactly as before)
@@ -384,10 +351,9 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    if durable_dir is None:
-        solved = _solve_on_driver(e0, both.schema["src"], max_iter)
-        if solved is not None:
-            return solved
+    solved = _solve_on_driver(e0, both.schema["src"], max_iter)
+    if solved is not None:
+        return solved
     nodes = both.select(F.col("src").alias("node")).distinct()
     # Self-loop trick: append (v, v) for every node, so the self row
     # delivers the node's OWN current label into its min-aggregation
@@ -409,13 +375,8 @@ def connected_components(
         nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
     )
     n_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if durable_dir is None:
-        adj = adj.repartition(n_shuffle, "dst").persist()
-        adj.count()
-    else:
-        adj_path = f"{run_dir}/adj"
-        adj.write.mode("overwrite").parquet(adj_path)
-        adj = adj.sparkSession.read.parquet(adj_path)
+    adj = adj.repartition(n_shuffle, "dst").persist()
+    adj.count()
     labels = None  # None ⇒ implicit identity labeling (round 1 inlined)
     converged = False
 
@@ -446,7 +407,6 @@ def connected_components(
         )
 
     rounds_done = 0
-    chunk = 0
     while rounds_done < max_iter:
         # Chain `chain` propagation rounds into ONE plan before the
         # checkpoint+count action (r15: per-round driver jobs are pure
@@ -463,14 +423,16 @@ def connected_components(
         frame = labels
         for _ in range(step):
             frame = one_round(frame)
-        new_labels = truncate(frame, rnd=chunk)
+        # LAZY pin, materialized by the convergence count below: one
+        # job per round instead of an eager-pin job + count job (guide
+        # §1.2: per-round driver actions are pure overhead at every scale)
+        new_labels = pin(frame)
         rounds_done += step
-        chunk += 1
         # FULL count (not limit(1)): touches every partition, so the
         # lazy checkpoint above is completely materialized by this one
         # job and lineage truncation still holds round to round
         changed = new_labels.where(F.col("label") != F.col("prev")).count()
-        if labels is not None and durable_dir is None:
+        if labels is not None:
             # new_labels is materialized and convergence read from it —
             # the previous round's checkpoint has no consumer left
             _release_local_checkpoint(labels)
@@ -478,23 +440,14 @@ def connected_components(
         if changed == 0:
             converged = True
             break
-    if durable_dir is None:
-        # the final labels are checkpointed — the adjacency cache and
-        # the input-edge checkpoint have no remaining consumer, so
-        # release the executor memory eagerly
-        adj.unpersist()
-        _release_local_checkpoint(e0)
+    # the final labels are pinned — the adjacency cache and the
+    # input-edge pin have no remaining consumer, so release the
+    # executor memory eagerly
+    adj.unpersist()
+    _release_local_checkpoint(e0)
     if not converged:
         raise _not_converged(max_iter)
-    out = labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-    if durable_dir is not None:
-        # stable final materialization: the alternating labels_{0,1}
-        # paths are scratch; the returned (lazy) DataFrame must not be
-        # backed by a path a subsequent round/run would overwrite.
-        final = f"{run_dir}/labels_final"
-        out.write.mode("overwrite").parquet(final)
-        out = labels.sparkSession.read.parquet(final)
-    return out
+    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def dedup_clusters(documents: DataFrame) -> DataFrame:
@@ -1065,7 +1018,6 @@ def pagerank(
     edges: DataFrame,
     max_iter: int = 10,
     damping: float = 0.85,
-    durable_dir: str | None = None,
     chain: int = 2,
 ) -> DataFrame:
     """PageRank over an undirected edge list — the numeric-iterative
@@ -1075,8 +1027,8 @@ def pagerank(
 
     Per iteration: each node sends rank/degree along its edges, ranks
     re-form as (1-d)/N + d·Σ incoming — one join + one partial-agg
-    shuffle, lineage truncated per round (same durability contract as
-    connected_components: ``durable_dir`` for cluster runs).
+    shuffle, lineage pinned per round (same durability contract as
+    connected_components: reliable under ``spark.checkpoint.dir``).
     Undirected edges mean no dangling mass. Returns (doc_id, rank)
     with Σ rank = 1 up to float error.
 
@@ -1089,30 +1041,9 @@ def pagerank(
     want on a cluster; default 2.
 
     edges: (doc_a, doc_b) pairs.
-
-    ``durable_dir`` must be a LOCAL filesystem path: the run claims a
-    private ``run-N`` subtree via an O_EXCL mkdir (same no-collision
-    contract as :func:`connected_components`), so URI schemes
-    (``hdfs://``, ``s3a://``) raise ValueError since r13 — previously
-    they ran with a documented collision risk. Cluster runs wanting
-    shared storage should point durable_dir at a job-unique local
-    staging path or pre-create per-run URIs themselves.
     """
-    # Claim a private run-N subtree up front (same no-collision
-    # contract as connected_components, ADVICE r12): two pagerank runs
-    # sharing a durable_dir previously overwrote each other's
-    # pr_edges/pr_deg/pr_adj/ranks files under lazy evaluation.
     if chain < 1:
         raise ValueError(f"chain must be >= 1, got {chain}")
-    run_dir = None if durable_dir is None else _claim_run_dir(durable_dir)
-
-    def truncate(df: DataFrame, rnd: int) -> DataFrame:
-        if run_dir is None:
-            return df.localCheckpoint()
-        path = f"{run_dir}/ranks_{rnd % 2}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
     # TRUNCATE the edge/degree lineage, don't persist it: with persist
     # the (possibly enormous — e.g. a PPJoin) edge-construction subplan
     # stays embedded in every iteration's logical plan and Catalyst
@@ -1131,24 +1062,12 @@ def pagerank(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    if run_dir is None:
-        # lazy: materialized (through the groupBy shuffle, which runs
-        # once) by the deg count below — one setup job instead of three
-        both = both.localCheckpoint(eager=False)
-    else:
-        edges_path = f"{run_dir}/pr_edges"
-        both.write.mode("overwrite").parquet(edges_path)
-        both = both.sparkSession.read.parquet(edges_path)
-    deg = both.groupBy("src").agg(F.count("*").alias("deg"))
-    # deg must honor the same durability contract as the ranks: a
-    # localCheckpoint'd deg dies with an executor and has no recompute
-    # path, failing every remaining iteration on a cluster run
-    if run_dir is None:
-        deg = deg.localCheckpoint(eager=False)
-    else:
-        deg_path = f"{run_dir}/pr_deg"
-        deg.write.mode("overwrite").parquet(deg_path)
-        deg = deg.sparkSession.read.parquet(deg_path)
+    # lazy: materialized (through the groupBy shuffle, which runs
+    # once) by the deg count below — one setup job instead of three
+    both = pin(both)
+    # pinned like both: the count below materializes it, and adj and
+    # the max_iter == 0 path read it without re-running the shuffle
+    deg = pin(both.groupBy("src").agg(F.count("*").alias("deg")))
     n_nodes = deg.count()
     if n_nodes == 0:
         # EDGELESS graph (a corpus with zero verified near-dup pairs):
@@ -1180,13 +1099,8 @@ def pagerank(
     # persist cannot re-trigger the per-round plan-growth problem.
     adj = both.join(deg, "src").select("src", "dst", "deg")
     n_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if run_dir is None:
-        adj = adj.repartition(n_shuffle, "src").persist()
-        adj.count()
-    else:
-        adj_path = f"{run_dir}/pr_adj"
-        adj.write.mode("overwrite").parquet(adj_path)
-        adj = adj.sparkSession.read.parquet(adj_path)
+    adj = adj.repartition(n_shuffle, "src").persist()
+    adj.count()
     ranks = None  # None ⇒ implicit uniform 1/N ranks (round 1 inlined)
 
     def one_iter(prev_ranks):
@@ -1230,16 +1144,14 @@ def pagerank(
     # inside the same job, and the arithmetic is the identical
     # IEEE sequence round by round).
     rounds_done = 0
-    chunk = 0
     while rounds_done < max_iter:
         step = min(chain, max_iter - rounds_done)
         frame = ranks
         for _ in range(step):
             frame = one_iter(frame)
-        new_ranks = truncate(frame, rnd=chunk)
+        new_ranks = pin(frame, eager=True)
         rounds_done += step
-        chunk += 1
-        if ranks is not None and run_dir is None:
+        if ranks is not None:
             _release_local_checkpoint(ranks)  # stale round, no consumer
         ranks = new_ranks
     if ranks is None:
@@ -1248,16 +1160,14 @@ def pagerank(
         ranks = deg.select(
             F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("rank")
         )
-        if run_dir is None:
-            adj.unpersist()
-            _release_local_checkpoint(both)
-        return ranks.select(F.col("node").alias("doc_id"), "rank")
-    if run_dir is None:
-        # final ranks are checkpointed; the adjacency cache and the
-        # edge/degree checkpoints that fed it have no consumer left
         adj.unpersist()
         _release_local_checkpoint(both)
-        _release_local_checkpoint(deg)
+        return ranks.select(F.col("node").alias("doc_id"), "rank")
+    # final ranks are pinned; the adjacency cache and the edge/degree
+    # pins that fed it have no consumer left
+    adj.unpersist()
+    _release_local_checkpoint(both)
+    _release_local_checkpoint(deg)
     return ranks.select(F.col("node").alias("doc_id"), "rank")
 
 
@@ -1566,7 +1476,7 @@ def substring_dup_pairs(
     # parquet scans: once per df-band branch × once per self-join side).
     # uw pins the corpus pass; banded pins the df-band join so the a/b
     # self-join reads a cached frame instead of re-running it per side.
-    uw = (
+    uw = pin(
         toked.select("doc_id", "toks", F.explode(pos).alias("p"))
         .select(
             "doc_id",
@@ -1575,15 +1485,16 @@ def substring_dup_pairs(
             ),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    banded = uw.join(
-        uw.groupBy("wh")
-        .agg(F.count("*").alias("_df"))
-        .where((F.col("_df") >= 2) & (F.col("_df") <= max_df))
-        .select("wh"),
-        "wh",
-    ).localCheckpoint(eager=False)
+    banded = pin(
+        uw.join(
+            uw.groupBy("wh")
+            .agg(F.count("*").alias("_df"))
+            .where((F.col("_df") >= 2) & (F.col("_df") <= max_df))
+            .select("wh"),
+            "wh",
+        )
+    )
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -1657,10 +1568,19 @@ def substring_dedup_trim(
     # lazy checkpoint (r15): toked feeds the fingerprint pass AND the
     # final rejoin — pinning it halves the tokenize work (one corpus
     # scan, one regex tokenization)
-    toked = documents.select(
-        "doc_id", tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks")
-    ).localCheckpoint(eager=False)
-    occ = (
+    toked = pin(
+        documents.select(
+            "doc_id", tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks")
+        )
+    )
+    # lazy checkpoint (r15, guide §2.4): occ feeds stats AND the
+    # starts join-back — the band side is an aggregate of the base,
+    # so no exchange reuse fires and the fingerprint pass ran
+    # twice. With toked also pinned (below the fn's entry), the
+    # ledger is ONE parquet scan + ONE tokenize + ONE fingerprint
+    # pass; the materialized frames are what Lee et al.'s
+    # ExactSubstr materializes (to disk) at scale.
+    occ = pin(
         toked.where(F.size("toks") >= w)
         .select(
             "doc_id",
@@ -1676,14 +1596,6 @@ def substring_dedup_trim(
                 "wh"
             ),
         )
-        # lazy checkpoint (r15, guide §2.4): occ feeds stats AND the
-        # starts join-back — the band side is an aggregate of the base,
-        # so no exchange reuse fires and the fingerprint pass ran
-        # twice. With toked also pinned (below the fn's entry), the
-        # ledger is ONE parquet scan + ONE tokenize + ONE fingerprint
-        # pass; the materialized frames are what Lee et al.'s
-        # ExactSubstr materializes (to disk) at scale.
-        .localCheckpoint(eager=False)
     )
     stats = occ.groupBy("wh").agg(
         F.min("doc_id").alias("_keeper"),
@@ -1791,9 +1703,11 @@ def selfrepeat_trim(documents: DataFrame, window_tokens: int = 10) -> DataFrame:
     # final rejoin in _excise_covered_spans — pinning it halves the
     # tokenize work (occ itself is referenced once via the window, so
     # it needs no pin here)
-    toked = documents.select(
-        "doc_id", tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks")
-    ).localCheckpoint(eager=False)
+    toked = pin(
+        documents.select(
+            "doc_id", tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks")
+        )
+    )
     occ = (
         toked.where(F.size("toks") >= w)
         .select(
@@ -1878,7 +1792,10 @@ def winnowed_dup_pairs(
         F.md5(F.concat_ws(" ", F.slice(F.col("toks"), F.col("p"), w))).alias("gh"),
     )
     win = Window.partitionBy("doc_id").orderBy("p").rowsBetween(0, k - 1)
-    uf = (
+    # lazy checkpoints (r15): same 4×-evaluation fix as
+    # substring_dup_pairs — the gram/winnow subtree ran once per
+    # df-band branch × once per self-join side
+    uf = pin(
         grams.select(
             "doc_id",
             "p",
@@ -1891,18 +1808,16 @@ def winnowed_dup_pairs(
         .where(F.col("p") <= F.col("n_grams") - F.lit(k - 1))
         .select("doc_id", "fp")
         .distinct()
-        # lazy checkpoints (r15): same 4×-evaluation fix as
-        # substring_dup_pairs — the gram/winnow subtree ran once per
-        # df-band branch × once per self-join side
-        .localCheckpoint(eager=False)
     )
-    banded = uf.join(
-        uf.groupBy("fp")
-        .agg(F.count("*").alias("_df"))
-        .where((F.col("_df") >= 2) & (F.col("_df") <= max_df))
-        .select("fp"),
-        "fp",
-    ).localCheckpoint(eager=False)
+    banded = pin(
+        uf.join(
+            uf.groupBy("fp")
+            .agg(F.count("*").alias("_df"))
+            .where((F.col("_df") >= 2) & (F.col("_df") <= max_df))
+            .select("fp"),
+            "fp",
+        )
+    )
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(

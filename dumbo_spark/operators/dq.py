@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from dumbo_spark.functions.numeric import dmoney as dmoney_col
+from dumbo_spark.operators._checkpoint import pin
 
 
 def _explode_rules(one_row: DataFrame, names: list[str]) -> DataFrame:
@@ -118,11 +119,10 @@ def benford_screen(orders: DataFrame) -> DataFrame:
     digit = F.substring(cents.cast("string"), 1, 1).cast("int")
     # lazy checkpoint: counts feeds the total scalar AND the share
     # stream — one fact scan instead of two (r15 optimization)
-    counts = (
+    counts = pin(
         orders.where(cents > 0)
         .groupBy(digit.alias("digit"))
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
     )
     total = counts.agg(F.sum("n").alias("n_total"))
     share = F.col("n").cast("double") / F.col("n_total").cast("double")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dumbo_spark.functions.numeric import dmoney, dsum
+from dumbo_spark.operators._checkpoint import pin
 
 SESSION_GAP_MIN = 30
 
@@ -786,10 +787,12 @@ def dow_hour_heatmap(events: DataFrame) -> DataFrame:
     """
     # lazy checkpoint: cells feeds the total scalar AND the share
     # stream — one fact scan instead of two (r15 optimization)
-    cells = events.groupBy(
-        (F.weekday("ts") + F.lit(1)).alias("dow"),
-        F.hour("ts").alias("hr"),
-    ).agg(F.count("*").alias("n_events")).localCheckpoint(eager=False)
+    cells = pin(
+        events.groupBy(
+            (F.weekday("ts") + F.lit(1)).alias("dow"),
+            F.hour("ts").alias("hr"),
+        ).agg(F.count("*").alias("n_events"))
+    )
     total = cells.agg(F.sum("n_events").alias("n_total"))
     return cells.crossJoin(F.broadcast(total)).select(
         "dow",
@@ -1054,19 +1057,18 @@ def peak_concurrency(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataF
     decomposes over hour buckets with the offsets trick
     (operators/packing.py).
     """
-    sessions = (
+    # the sessionize+groupBy subtree feeds THREE branches
+    # (endpoints, covered-days via days, carry) — lazily checkpoint
+    # so it runs once, not per branch (r15 optimization, guide
+    # §2.4; consumers are windows/aggregates, not size-estimated
+    # joins, so no AQE stat is lost)
+    sessions = pin(
         assign_sessions(events.select("user_id", "event_id", "ts"), gap_min)
         .groupBy("user_id", "session_id")
         .agg(
             F.unix_micros(F.min("ts")).alias("s_us"),
             F.unix_micros(F.max("ts")).alias("e_us"),
         )
-        # the sessionize+groupBy subtree feeds THREE branches
-        # (endpoints, covered-days via days, carry) — lazily checkpoint
-        # so it runs once, not per branch (r15 optimization, guide
-        # §2.4; consumers are windows/aggregates, not size-estimated
-        # joins, so no AQE stat is lost)
-        .localCheckpoint(eager=False)
     )
     # explode(array(start, end)) instead of a two-branch unionByName:
     # the sessionize+groupBy subtree is evaluated ONCE, not once per
@@ -1142,9 +1144,7 @@ def session_depth_histogram(
     )
     # lazy checkpoint: hist feeds the total scalar AND the share
     # stream — one sessionize+aggregate pass instead of two (r15)
-    hist = depths.groupBy("depth").agg(
-        F.count("*").alias("n_sessions")
-    ).localCheckpoint(eager=False)
+    hist = pin(depths.groupBy("depth").agg(F.count("*").alias("n_sessions")))
     total = hist.agg(F.sum("n_sessions").alias("n_total"))
     return hist.crossJoin(F.broadcast(total)).select(
         "depth",
@@ -1492,9 +1492,9 @@ def event_mix_weekly_drift(events: DataFrame) -> DataFrame:
     # lazy checkpoint (r15): the weekly cell aggregate feeds THREE
     # branches (both grid distincts + the densify join) — three corpus
     # scans in the audited plan for a |weeks|·|types|-row frame
-    cell = events.groupBy(week.alias("week"), "event_type").agg(
-        F.count("*").alias("_c")
-    ).localCheckpoint(eager=False)
+    cell = pin(
+        events.groupBy(week.alias("week"), "event_type").agg(F.count("*").alias("_c"))
+    )
     # dense week×type grid over OBSERVED weeks (both sides tiny): a
     # type absent in an observed week must contribute its full share
     # to the L1 (a bare lag over sparse cells would skip it)
@@ -1540,9 +1540,7 @@ def user_active_days_histogram(events: DataFrame) -> DataFrame:
     )
     # lazy checkpoint: hist feeds the total scalar AND the share
     # stream — one fact scan instead of two (r15 optimization)
-    hist = per.groupBy("n_active_days").agg(
-        F.count("*").alias("n_users")
-    ).localCheckpoint(eager=False)
+    hist = pin(per.groupBy("n_active_days").agg(F.count("*").alias("n_users")))
     total = hist.agg(F.sum("n_users").alias("_t"))
     return (
         hist.crossJoin(F.broadcast(total))
@@ -1669,10 +1667,9 @@ def cusum_drift(
 
     # lazy checkpoint: daily feeds the mu/sigma scalars AND the walk
     # frame — one fact scan instead of two (r15 optimization)
-    daily = (
+    daily = pin(
         events.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
         .agg(F.avg(F.col("value").cast("double")).alias("x"))
-        .localCheckpoint(eager=False)
     )
     stats = daily.agg(
         F.avg("x").alias("_mu"),

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from dumbo_spark.operators._checkpoint import _release_local_checkpoint
+from dumbo_spark.operators._checkpoint import _release_local_checkpoint, pin
 
 
 def copurchase_triangles(
@@ -38,7 +38,7 @@ def copurchase_triangles(
     triangle counts — the clustering-structure summary of a
     co-occurrence graph.
     """
-    # localCheckpoint truncates lineage, not just caches it: the edge
+    # pin() truncates lineage, not just caches it: the edge
     # subtree feeds FIVE downstream branches (degree, both wedge legs,
     # closing set, node/edge counts), and with plain persist Catalyst
     # re-embeds and re-optimizes the whole edge-construction subplan
@@ -46,7 +46,7 @@ def copurchase_triangles(
     # exchanges in the audit) even though the cache dedupes execution.
     # Checkpointing makes each branch read a flat cached scan (same
     # pattern as the iterative CC in operators/dedup.py).
-    edges = _copurchase_edges(lineitem, min_cooccur, max_basket).localCheckpoint()
+    edges = pin(_copurchase_edges(lineitem, min_cooccur, max_basket), eager=True)
     # Degree-ordered enumeration (Chiba–Nishizeki / the MapReduce
     # triangle-counting standard): re-orient every edge from its
     # lower-(degree, id) endpoint to its higher one. Orientation by the
@@ -57,13 +57,12 @@ def copurchase_triangles(
     # plan surviving a dense graph and quadratic blowup at the hubs.
     # deg is referenced twice (both orientation joins) — lazy-checkpoint
     # so the explode+groupBy over the edge list runs once, not per branch
-    deg = (
+    deg = pin(
         edges.select(F.explode(F.array("src", "dst")).alias("v"))
         .groupBy("v")
         .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=False)
     )
-    oriented = (
+    oriented = pin(
         edges.join(deg.withColumnRenamed("v", "src").withColumnRenamed("deg", "ds"), "src")
         .join(deg.withColumnRenamed("v", "dst").withColumnRenamed("deg", "dd"), "dst")
         .select(
@@ -87,8 +86,8 @@ def copurchase_triangles(
             )
             .alias("e")
         )
-        .select("e.lo", "e.hi", "e.dlo", "e.dhi")
-        .localCheckpoint()
+        .select("e.lo", "e.hi", "e.dlo", "e.dhi"),
+        eager=True,
     )
     # wedges at the lowest-ordered node: two out-edges of the same lo
     # (hash equi-join on lo; the strict (deg, id) tie-broken inequality
@@ -175,12 +174,12 @@ def kcore_nodes(
 
     Scale shape per round: one degree partial-agg + two broadcastable
     anti-joins against the (shrinking) weak-node set; lineage is
-    truncated each round via localCheckpoint exactly like the iterative
+    truncated each round via pin() exactly like the iterative
     CC (operators/dedup.py) so the plan never grows with iteration
     count. Convergence is monotone (node set only shrinks), ≤ max_iter
     rounds.
     """
-    edges = _copurchase_edges(lineitem, min_cooccur, max_basket).localCheckpoint()
+    edges = pin(_copurchase_edges(lineitem, min_cooccur, max_basket), eager=True)
     for _ in range(max_iter):
         # explode(array(src, dst)) — same endpoint multiset as the old
         # src/dst unionAll, but the cached edge RDD is scanned once per
@@ -197,17 +196,15 @@ def kcore_nodes(
         # (touches every partition), so materialization and the probe
         # share one job instead of eager-checkpoint + isEmpty (guide
         # §1.2: per-round driver actions are overhead at every scale).
-        weak = deg.where(F.col("degree") < k).select("v").localCheckpoint(
-            eager=False
-        )
+        weak = pin(deg.where(F.col("degree") < k).select("v"))
         if weak.count() == 0:
             _release_local_checkpoint(weak)
             break
-        new_edges = (
+        new_edges = pin(
             edges.join(weak.withColumnRenamed("v", "src"), "src", "left_anti")
             .join(weak.withColumnRenamed("v", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-            .localCheckpoint()
+            .select("src", "dst"),
+            eager=True,
         )
         # the new round's edges are materialized — the stale round and
         # its weak set have no consumer left (see dedup.py: blocks
@@ -237,14 +234,14 @@ def _bounded_po(lineitem: DataFrame, max_basket: int) -> DataFrame:
 
 
 def _basket_po(lineitem: DataFrame, max_basket: int) -> DataFrame:
-    """:func:`_bounded_po`, localCheckpoint()ed — for consumers that
+    """:func:`_bounded_po`, pinned — for consumers that
     branch off the frame 3-4 times (frequencies, order total, both
     pairing sides). Without truncation Catalyst re-embeds the
     distinct+filter subplan per branch — re-scanning the fact table
     once PER BRANCH at 100 TB (the finding that cut the triangle
     census 59.9s → 20.9s at 10×, SCALE.md). Single-consumer paths
     (the edge list) use the lazy form directly."""
-    return _bounded_po(lineitem, max_basket).localCheckpoint()
+    return pin(_bounded_po(lineitem, max_basket), eager=True)
 
 
 def _pair_counts(po: DataFrame) -> DataFrame:
@@ -287,9 +284,7 @@ def basket_rules(
     )
     # referenced twice (fa/fb) — lazy checkpoint so the groupBy over the
     # basket frame runs once, not per branch (r15 optimization)
-    item_freq = po.groupBy("l_partkey").agg(
-        F.count("*").alias("n_item")
-    ).localCheckpoint(eager=False)
+    item_freq = pin(po.groupBy("l_partkey").agg(F.count("*").alias("n_item")))
 
     pairs = _pair_counts(po).where(F.col("n_ab") >= min_cooccur)
     fa = item_freq.select(
@@ -468,7 +463,7 @@ def ktruss_edges(
     Scale shape per round: one ordered-wedge triangle enumeration
     (the copurchase_triangles plan, triangle-bounded) + a left join
     back to the edge list; lineage truncated per round via
-    localCheckpoint like the other iterative operators. Edges only
+    pin() like the other iterative operators. Edges only
     shrink, so convergence is monotone; the oracle replays EXACTLY
     ``max_iter`` peels (post-fixpoint rounds are no-ops), so engine
     and SQL agree whether or not the fixpoint arrives early.
@@ -477,9 +472,7 @@ def ktruss_edges(
     their final triangle counts.
     """
     # lazy checkpoint: the count materializes it in the same job
-    edges = _copurchase_edges(lineitem, min_cooccur, max_basket).localCheckpoint(
-        eager=False
-    )
+    edges = pin(_copurchase_edges(lineitem, min_cooccur, max_basket))
     n_edges = edges.count()
     backing = edges  # the checkpoint holding the current edge set's blocks
     final = None
@@ -490,7 +483,9 @@ def ktruss_edges(
         # supports were computed on, so the final per-edge supports are
         # already in hand — the old epilogue re-ran the whole triangle
         # enumeration once more to recover a column this round computed
-        kept = (
+        # lazy: the full count below materializes every partition in
+        # the same job (one job/round instead of checkpoint + count)
+        kept = pin(
             edges.join(
                 supp,
                 (edges["src"] == supp["es"]) & (edges["dst"] == supp["ed"]),
@@ -500,9 +495,6 @@ def ktruss_edges(
                 "src", "dst", F.coalesce(F.col("supp"), F.lit(0)).alias("supp")
             )
             .where(F.col("supp") >= k - 2)
-            # lazy: the full count below materializes every partition in
-            # the same job (one job/round instead of checkpoint + count)
-            .localCheckpoint(eager=False)
         )
         n_kept = kept.count()
         _release_local_checkpoint(backing)  # stale round, no consumer left
@@ -550,18 +542,17 @@ def clustering_coefficient(
 
     Output: (part, degree, n_triangles, clustering_coeff).
     """
-    edges = _copurchase_edges(lineitem, min_cooccur, max_basket).localCheckpoint()
+    edges = pin(_copurchase_edges(lineitem, min_cooccur, max_basket), eager=True)
     # deg is referenced THREE times (both orientation joins + the final
     # left join) — lazy-checkpoint it so the explode+groupBy over the
     # edge list runs once instead of per branch (no extra job; the
     # query's own action materializes it)
-    deg = (
+    deg = pin(
         edges.select(F.explode(F.array("src", "dst")).alias("v"))
         .groupBy("v")
         .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=False)
     )
-    oriented = (
+    oriented = pin(
         edges.join(deg.withColumnRenamed("v", "src").withColumnRenamed("deg", "ds"), "src")
         .join(deg.withColumnRenamed("v", "dst").withColumnRenamed("deg", "dd"), "dst")
         .select(
@@ -585,8 +576,8 @@ def clustering_coefficient(
             )
             .alias("e")
         )
-        .select("e.lo", "e.hi", "e.dlo", "e.dhi")
-        .localCheckpoint()
+        .select("e.lo", "e.hi", "e.dlo", "e.dhi"),
+        eager=True,
     )
     w1, w2 = oriented.alias("w1"), oriented.alias("w2")
     wedges = w1.join(
@@ -600,7 +591,7 @@ def clustering_coefficient(
     # No manual broadcast probe here (VERDICT r6 #5): the previous
     # eager `oriented.count() <= 5M` was a driver-side action during
     # query construction steering a rows-for-bytes proxy. AQE sees the
-    # actual runtime size of the localCheckpointed `closing` side and
+    # actual runtime size of the pinned `closing` side and
     # converts the sort-merge join to broadcast itself when it fits
     # (and, unlike the magic number, declines when it doesn't).
     closing = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dumbo_spark.functions.text import tokens
+from dumbo_spark.operators._checkpoint import pin
 from dumbo_spark.operators.sampling import _md5_bucket, sql_md5_bucket
 
 #: The shared context-window token budget (ADVICE r9): greedy_pack_bins,
@@ -385,14 +386,13 @@ def interleaved_mix_head(
     ).select("source", "bucket", "_off")
     # lazy checkpoint: srcs feeds the count scalar AND the index join
     # — one corpus distinct instead of two (r15 optimization)
-    srcs = (
+    srcs = pin(
         documents.select("source")
         .distinct()
         .withColumn(
             "src_idx",
             F.row_number().over(Window.orderBy("source")) - 1,
         )
-        .localCheckpoint(eager=False)
     )
     n_src = srcs.agg(F.count("*").alias("_ns"))
     w_in = Window.partitionBy("source", "bucket").orderBy("_k", "doc_id")
@@ -441,10 +441,12 @@ def training_mix_epochs(
     weights = weights or {}
     # lazy checkpoint: avail feeds the weight-total scalar AND the final
     # projection — one corpus scan instead of two (r15 optimization)
-    avail = documents.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(_n_tokens()).alias("available_tokens"),
-    ).localCheckpoint(eager=False)
+    avail = pin(
+        documents.groupBy("source").agg(
+            F.count("*").alias("n_docs"),
+            F.sum(_n_tokens()).alias("available_tokens"),
+        )
+    )
     if weights:
         w_col = F.coalesce(
             *[
@@ -607,16 +609,17 @@ def source_temperature_mix(documents: DataFrame, alpha: float = 0.3) -> DataFram
     # lazy checkpoints: per feeds the total AND the share frame; p
     # feeds the normalizer AND the final projection — one corpus scan
     # instead of four (r15 optimization)
-    per = (
+    per = pin(
         documents.select("source", F.size(tokens("text")).alias("_n"))
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("_n").alias("n_tokens"))
-        .localCheckpoint(eager=False)
     )
     tot = per.agg(F.sum("n_tokens").alias("_tot"))
-    p = per.crossJoin(F.broadcast(tot)).withColumn(
-        "_p", F.col("n_tokens") / F.col("_tot")
-    ).localCheckpoint(eager=False)
+    p = pin(
+        per.crossJoin(F.broadcast(tot)).withColumn(
+            "_p", F.col("n_tokens") / F.col("_tot")
+        )
+    )
     z = p.agg(F.sum(F.pow(F.col("_p"), F.lit(alpha))).alias("_z"))
     return (
         p.crossJoin(F.broadcast(z))

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from dumbo_spark.operators._checkpoint import pin
+
 #: hex-digit value lookup used by both engines (see multimodal.py for
 #: the same trick; DuckDB cannot cast hex strings numerically)
 _HEX = "0123456789abcdef"
@@ -208,9 +210,7 @@ def source_mix_rebalance(documents: DataFrame) -> DataFrame:
     """
     # lazy checkpoint: counts feeds the rollup scalar AND the meta
     # join — one corpus scan instead of two (r15 optimization)
-    counts = documents.groupBy("source").agg(
-        F.count("*").alias("_cnt")
-    ).localCheckpoint(eager=False)
+    counts = pin(documents.groupBy("source").agg(F.count("*").alias("_cnt")))
     tot = counts.agg(F.sum("_cnt").alias("_total"), F.count("*").alias("_k"))
     meta = counts.crossJoin(F.broadcast(tot))
     # threshold in millionths: floor(1e6 · total / (k · count_s)) — all

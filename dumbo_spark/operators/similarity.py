@@ -23,6 +23,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from dumbo_spark.operators._checkpoint import pin
+
 #: fixed hyperplane seed table — part of the operator contract
 _LSH_SEED = 0x5DEECE66D
 
@@ -925,12 +927,11 @@ def pca_top_component(
     # (gram / sums / count) read it — without truncation each branch
     # would re-run the corpus pass. All consumers are filters feeding
     # explicitly-broadcast joins, so no AQE size-estimate is lost.
-    stats = (
+    stats = pin(
         embeddings.select("embedding")
         .mapInPandas(gram_batches, "j int, k int, g double")
         .groupBy("j", "k")
         .agg(F.sum("g").alias("g"))
-        .localCheckpoint(eager=False)
     )
     gram = stats.where(F.col("k") >= 0)
     ncnt = stats.where((F.col("j") == -1) & (F.col("k") == -1)).select(
@@ -948,7 +949,9 @@ def pca_top_component(
     mj = means.select(F.col("pos").alias("j"), F.col("mu").alias("mu_j"), "n")
     mk = means.select(F.col("pos").alias("k"), F.col("mu").alias("mu_k"))
     # C = (G − n·μμᵀ)/n, exact algebraic centering — no second data pass
-    cov = (
+    # lazy (r15): materialized by the first consumer's job instead
+    # of an eager stand-alone job at construction time
+    cov = pin(
         gram.join(F.broadcast(mj), "j")
         .join(F.broadcast(mk), "k")
         .select(
@@ -959,9 +962,6 @@ def pca_top_component(
                 / F.col("n")
             ).alias("c"),
         )
-        # lazy (r15): materialized by the first consumer's job instead
-        # of an eager stand-alone job at construction time
-        .localCheckpoint(eager=False)
     )
     spark = embeddings.sparkSession
     v = spark.range(d).select(
@@ -981,7 +981,7 @@ def pca_top_component(
             .groupBy("j")
             .agg(F.sum(F.col("c") * F.col("val")).alias("val"))
         )
-    v = v.localCheckpoint(eager=False)
+    v = pin(v)
     norm = v.agg(F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("_nrm"))
     vn = v.crossJoin(F.broadcast(norm)).select(
         "j", (F.col("val") / F.col("_nrm")).alias("val")
@@ -1582,10 +1582,10 @@ def matryoshka_fidelity(
     """
     emb = embeddings.select("vec_id", "embedding")
     # the full-width top-k is consumed 2× per dim branch (count + hits
-    # join); localCheckpoint pins the tiny k·n_queries-row result so
+    # join); pin() cuts the tiny k·n_queries-row result so
     # the corpus isn't re-scanned per consumer — total scans drop from
     # ~3·|dims| to |dims|+1
-    full = _topk_at_dim(emb, n_queries, k, None).localCheckpoint(eager=False)
+    full = pin(_topk_at_dim(emb, n_queries, k, None))
     out = None
     for d in dims:
         trunc = _topk_at_dim(emb, n_queries, k, d)

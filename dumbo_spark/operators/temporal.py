@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dumbo_spark.functions.numeric import dmoney
+from dumbo_spark.operators._checkpoint import pin
 
 
 def asof_last_event(
@@ -433,11 +434,13 @@ def cart_abandonment(events: DataFrame, window_minutes: int = 60) -> DataFrame:
     # lazy checkpoint (r15, guide §2.4): the click slice feeds both the
     # conversion band-join and the clickers rollup — unpinned it
     # scanned the event table twice
-    clicks = events.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts").alias("click_ts"),
-        F.col("ts").cast("date").alias("day"),
-    ).localCheckpoint(eager=False)
+    clicks = pin(
+        events.where(F.col("event_type") == "click").select(
+            "user_id",
+            F.col("ts").alias("click_ts"),
+            F.col("ts").cast("date").alias("day"),
+        )
+    )
     purchases = events.where(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts")
     )

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from dumbo_spark.functions.text import ngrams, tokens
+from dumbo_spark.operators._checkpoint import pin
 
 #: tiny per-language stopword lists for the heuristic classifier; ASCII
 #: only so Spark (Java regex/lower) and DuckDB (RE2) agree bit-for-bit.
@@ -274,9 +275,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3) -> DataFrame:
     # one tokenize pass (r15): the tf explode, the idf side's distinct
     # explode, and its corpus count all derive from a lazily
     # checkpointed token-array base (previously three scans+tokenizes)
-    base = documents.select("doc_id", tokens("text").alias("_toks")).localCheckpoint(
-        eager=False
-    )
+    base = pin(documents.select("doc_id", tokens("text").alias("_toks")))
     tf = (
         base.select("doc_id", F.explode("_toks").alias("token"))
         .groupBy("doc_id", "token")
@@ -737,9 +736,9 @@ def cms_hitters_checked(
     from functools import reduce as _reduce
 
     # the vocabulary feeds 6 consumers (4 sketch rows, the top-k cut,
-    # the total); localCheckpoint pins the vocab-sized frame so the
+    # the total); pin() cuts the vocab-sized frame so the
     # corpus-sized tokenize+count runs once, not per consumer
-    wc = wordcount(documents).localCheckpoint(eager=False)
+    wc = pin(wordcount(documents))
 
     def bucket_of(i: int, col: F.Column) -> F.Column:
         from dumbo_spark.operators.sampling import _md5_bucket
@@ -1150,7 +1149,7 @@ def _bpe_train(documents: DataFrame, n_merges: int = 6):
     - apply: left-to-right non-overlapping merge of (a, b) in every
       word's symbol array via ``F.aggregate`` — a Catalyst fold, no
       Python ("aaa" + merge(a,a) → [aa, a], exactly BPE's scan order);
-    - per-round ``localCheckpoint`` truncates the fold lineage (the
+    - a per-round ``pin`` truncates the fold lineage (the
       iterative-operator discipline from graph.py — without it round k
       recomputes all k−1 prior folds from the parquet scan).
 
@@ -1165,10 +1164,8 @@ def _bpe_train(documents: DataFrame, n_merges: int = 6):
     :func:`bpe_compression_stats` aggregates the latter two (sharing wc
     saves it a second corpus scan+shuffle; r15 optimization).
     """
-    wc = wordcount(documents).localCheckpoint(eager=False)
-    v = wc.select("cnt", F.split("word", "").alias("syms")).localCheckpoint(
-        eager=False
-    )
+    wc = pin(wordcount(documents))
+    v = pin(wc.select("cnt", F.split("word", "").alias("syms")))
     merges = []
     for r in range(n_merges):
         # len-1 words carry no pairs; the size guard also keeps
@@ -1197,22 +1194,24 @@ def _bpe_train(documents: DataFrame, n_merges: int = 6):
         a, b, c = top[0]["a"], top[0]["b"], int(top[0]["pair_count"])
         merges.append((r + 1, a, b, c))
         merged = a + b
-        v = v.select(
-            "cnt",
-            F.aggregate(
-                "syms",
-                F.expr("cast(array() as array<string>)"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(a))
-                    & (x == F.lit(b)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1),
-                        F.array(F.lit(merged)),
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ).alias("syms"),
-        ).localCheckpoint(eager=False)
+        v = pin(
+            v.select(
+                "cnt",
+                F.aggregate(
+                    "syms",
+                    F.expr("cast(array() as array<string>)"),
+                    lambda acc, x: F.when(
+                        (F.size(acc) > 0)
+                        & (F.element_at(acc, -1) == F.lit(a))
+                        & (x == F.lit(b)),
+                        F.concat(
+                            F.slice(acc, 1, F.size(acc) - 1),
+                            F.array(F.lit(merged)),
+                        ),
+                    ).otherwise(F.concat(acc, F.array(x))),
+                ).alias("syms"),
+            )
+        )
     return merges, v, wc
 
 
@@ -1268,9 +1267,7 @@ def _bpe_train_batched(
     tuples; v the post-merge vocabulary frame (cnt, syms).
     """
     wc = wordcount(documents)
-    v = wc.select("cnt", F.split("word", "").alias("syms")).localCheckpoint(
-        eager=False
-    )
+    v = pin(wc.select("cnt", F.split("word", "").alias("syms")))
     merges = []
     for r in range(n_rounds):
         pairs = v.where(F.size("syms") >= 2).select(
@@ -1327,14 +1324,16 @@ def _bpe_train_batched(
 
             return fold
 
-        v = v.select(
-            "cnt",
-            F.aggregate(
-                "syms",
-                F.expr("cast(array() as array<string>)"),
-                make_fold(list(kept)),
-            ).alias("syms"),
-        ).localCheckpoint(eager=False)
+        v = pin(
+            v.select(
+                "cnt",
+                F.aggregate(
+                    "syms",
+                    F.expr("cast(array() as array<string>)"),
+                    make_fold(list(kept)),
+                ).alias("syms"),
+            )
+        )
     return merges, v
 
 
@@ -1499,10 +1498,12 @@ def corpus_source_concentration(documents: DataFrame) -> DataFrame:
     # the corpus scan+aggregate once per branch, 4–5 corpus scans for a
     # |sources|-row frame. One scan at any scale with the checkpoint;
     # no extra job (the query's own action materializes it).
-    per = documents.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.size(tokens("text"))).alias("n_tokens"),
-    ).localCheckpoint(eager=False)
+    per = pin(
+        documents.groupBy("source").agg(
+            F.count("*").alias("n_docs"),
+            F.sum(F.size(tokens("text"))).alias("n_tokens"),
+        )
+    )
     total = per.agg(F.sum("n_tokens").alias("_t"))
     shared = per.crossJoin(F.broadcast(total)).withColumn(
         "token_share",
@@ -1800,9 +1801,7 @@ def stupid_backoff_scores(documents: DataFrame, alpha: float = 0.4) -> DataFrame
     # their shuffle sizes and broadcasts the small ones (the
     # doc_perplexity lesson: checkpoint bases, never the aggregates
     # that feed size-estimated joins).
-    toks = documents.select("doc_id", tokens("text").alias("_t")).localCheckpoint(
-        eager=False
-    )
+    toks = pin(documents.select("doc_id", tokens("text").alias("_t")))
     train = toks.where(F.col("doc_id") % 2 == 0)
     score = toks.where(F.col("doc_id") % 2 == 1)
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dumbo_spark.functions.numeric import dmoney, dsum
+from dumbo_spark.operators._checkpoint import pin
 
 
 def topk_per_group(orders: DataFrame, k: int = 3) -> DataFrame:
@@ -234,18 +235,18 @@ def global_rank(
     # not fire, each branch samples boundaries INDEPENDENTLY, and the
     # offsets no longer describe the data branch's partitions — ranks
     # silently stop being a permutation (reproduced: 11 "deciles",
-    # bucket sizes 1172..1828 at 15k rows). localCheckpoint(eager=False)
-    # pins ONE realization of the shuffle before the branch split: one
-    # extra cached pass over the already-shuffled frame — the same I/O a
-    # MapReduce terasort-rank pays writing the ranged run before the
-    # two-read counting pass. It also fails LOUDLY on executor loss
-    # (lineage is truncated, no silent re-sample), unlike persist(),
+    # bucket sizes 1172..1828 at 15k rows). A lazy pin() fixes ONE
+    # realization of the shuffle before the branch split: one extra
+    # pass over the already-shuffled frame — the same I/O a MapReduce
+    # terasort-rank pays writing the ranged run before the two-read
+    # counting pass. Neither kind of pin re-samples, unlike persist(),
     # whose evicted blocks would recompute with fresh boundaries and
-    # silently resurrect this bug under memory pressure. At cluster
-    # scale prefer reliable checkpoints (spark.checkpoint.dir) if
-    # executor loss must be survivable; correctness must never depend
-    # on incidental exchange reuse.
-    r = _ranged_frame(df, sort_exprs, parts).localCheckpoint(eager=False)
+    # silently resurrect this bug under memory pressure: a local pin
+    # fails LOUDLY on executor loss, and under spark.checkpoint.dir the
+    # reliable pin's write reads the same range-shuffle output, so a
+    # lost executor is survived from the written files. Correctness
+    # must never depend on incidental exchange reuse.
+    r = pin(_ranged_frame(df, sort_exprs, parts))
     wp = Window.partitionBy("_pid").orderBy(*sort_exprs)
     r = r.withColumn("_rn", F.row_number().over(wp))
     woff = Window.orderBy("_pid")

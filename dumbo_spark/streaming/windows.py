@@ -23,6 +23,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from dumbo_spark.functions.numeric import dsum
+from dumbo_spark.operators._checkpoint import pin
 from dumbo_spark.session import ensure_runtime_confs
 
 
@@ -99,7 +100,7 @@ def run_to_memory(
     (availableNow trigger) and return the result as a batch DataFrame.
     ``mode``: "complete" for aggregations, "append" for joins/selects.
 
-    The result is SNAPSHOTTED (localCheckpoint): ``spark.table(name)``
+    The result is SNAPSHOTTED (an eager pin): ``spark.table(name)``
     is a lazy by-name reference that a later run reusing the same
     query name would silently rebind — and read PARTIALLY-FILLED
     mid-run — so a held result frame from a previous invocation would
@@ -112,7 +113,7 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
-    return spark.table(name).localCheckpoint()
+    return pin(spark.table(name), eager=True)
 
 
 def click_purchase_stream_join(

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import functools
 import logging
 import os
@@ -126,3 +127,22 @@ def on_both_cc_paths(test):
             test(*args, **kwargs)
 
     return run
+
+
+@contextlib.contextmanager
+def checkpoint_dir_set(sc, path):
+    """Give the shared session a checkpoint directory, so every pin is a
+    reliable checkpoint, and unset it on exit: later tests must see the
+    default local pins. PySpark can set the directory but not unset it,
+    so the exit writes Spark's own field through py4j."""
+    sc.setCheckpointDir(str(path))
+    try:
+        yield path
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    with checkpoint_dir_set(spark.sparkContext, tmp_path / "checkpoints") as path:
+        yield path

@@ -106,11 +106,7 @@ def test_core_suite_pass_times_each_name_once(spark, sf_dir):
     # map must carry one positive timing per core name and the total
     # must be their sum
     sub = {n: QUERIES[n] for n in ("count_distinct", "compat_wordcount")}
-    from dumbo_spark.testing import release_persistent_rdds
-
-    total, detail = bench.core_suite_pass(
-        spark, sub, sf_dir, release_persistent_rdds
-    )
+    total, detail = bench.core_suite_pass(spark, sub, sf_dir)
     assert set(detail) == set(sub)
     assert all(v > 0 for v in detail.values())
     assert total == round(sum(detail.values()), 3)
@@ -119,8 +115,6 @@ def test_core_suite_pass_times_each_name_once(spark, sf_dir):
 def test_adjudicate_uses_extra_runner_for_synthetic_rows(spark, sf_dir):
     # core_suite is a synthetic timing row with no registry entry; a
     # breach on it must re-run via its own runner instead of KeyErroring
-    from dumbo_spark.testing import release_persistent_rdds
-
     calls = []
     out = bench.adjudicate(
         spark,
@@ -128,7 +122,6 @@ def test_adjudicate_uses_extra_runner_for_synthetic_rows(spark, sf_dir):
         sf_dir,
         {"core_suite": 10.0},
         {"core_suite": 0.5},
-        release_persistent_rdds,
         extra_runners={"core_suite": lambda: calls.append(1)},
     )
     assert set(out["rows"]) == {"core_suite"}
@@ -248,7 +241,6 @@ def test_adjudicate_flags_only_true_breaches(spark, sf_dir):
     # re-run median-of-3 in the quiet JVM and carry BOTH readings; the
     # isolated number decides window-contention vs regression-suspect.
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.testing import release_persistent_rdds
 
     name = "group_sum"
     timings = {
@@ -257,9 +249,7 @@ def test_adjudicate_flags_only_true_breaches(spark, sf_dir):
         "join_inner": 1.0, # exactly 2x close -> NOT a breach (strict >)
     }
     close = {name: 0.05, "wordcount": 0.1, "join_inner": 0.5}
-    out = bench.adjudicate(
-        spark, QUERIES, sf_dir, timings, close, release_persistent_rdds
-    )
+    out = bench.adjudicate(spark, QUERIES, sf_dir, timings, close)
     assert set(out["rows"]) == {name}
     row = out["rows"][name]
     assert row["sweep_sec"] == 10.0 and row["close_sec"] == 0.05
@@ -272,10 +262,6 @@ def test_adjudicate_flags_only_true_breaches(spark, sf_dir):
 
 def test_adjudicate_without_baseline_is_a_noop(spark, sf_dir):
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.testing import release_persistent_rdds
 
-    out = bench.adjudicate(
-        spark, QUERIES, sf_dir, {"group_sum": 99.0}, None,
-        release_persistent_rdds,
-    )
+    out = bench.adjudicate(spark, QUERIES, sf_dir, {"group_sum": 99.0}, None)
     assert out["rows"] == {} and "baseline" in out

@@ -90,8 +90,10 @@ def test_driver_path_raises_exactly_when_the_loop_does(
 
 
 def test_null_ids_and_durable_runs_take_the_distributed_path(
-    spark, tmp_path, paths_taken
+    spark, checkpoint_dir, paths_taken
 ):
+    """A null id sends a graph to the loop; a checkpoint directory does
+    not: a small graph under one is still solved on the driver."""
     with_null = spark.createDataFrame(
         [(1, None), (2, 3)], "doc_a long, doc_b long"
     )
@@ -99,7 +101,7 @@ def test_null_ids_and_durable_runs_take_the_distributed_path(
     assert {(1, 1), (2, 2), (3, 2)} <= {(r.doc_id, r.cluster_id) for r in got}
     assert paths_taken == ["distributed"]
     edges = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
-    durable = dedup.connected_components(edges, durable_dir=str(tmp_path))
+    durable = dedup.connected_components(edges)
     assert {(r.doc_id, r.cluster_id) for r in durable.collect()} == {
         (1, 1), (2, 1), (3, 1)}
-    assert paths_taken == ["distributed"]  # durable runs never ask
+    assert paths_taken == ["distributed", "driver"]

@@ -7,7 +7,7 @@ dumbo-mapredtest-style edge cases (empty input, nulls, single group).
 from __future__ import annotations
 
 import pytest
-from conftest import on_both_cc_paths
+from conftest import checkpoint_dir_set, on_both_cc_paths
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -274,43 +274,43 @@ def test_connected_components_chain_and_island(spark):
 
 @on_both_cc_paths
 def test_connected_components_durable_checkpoint(spark, tmp_path):
-    """durable_dir round-trips labels through parquet each round (the
-    cluster-durability path); result identical to the localCheckpoint
-    default, and the alternating temp paths exist."""
+    """Under a checkpoint directory every pin is a reliable checkpoint
+    (the cluster-durability path): the rows equal the local-pin
+    default, and the pins are written under the directory."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "doc_a long, doc_b long"
     )
-    durable = {
-        (r.doc_id, r.cluster_id)
-        for r in dedup.connected_components(
-            edges, durable_dir=str(tmp_path)
-        ).collect()
-    }
     local = {
         (r.doc_id, r.cluster_id)
         for r in dedup.connected_components(edges).collect()
     }
+    with checkpoint_dir_set(spark.sparkContext, tmp_path):
+        durable = {
+            (r.doc_id, r.cluster_id)
+            for r in dedup.connected_components(edges).collect()
+        }
     assert durable == local
     assert durable == {(i, 1) for i in range(1, 6)} | {(10, 10), (11, 10)}
-    # each invocation claims its own run-N dir; final labels live on a
-    # stable path scratch rounds never overwrite
-    assert (tmp_path / "run-0" / "labels_final").exists()
+    assert list(tmp_path.glob("*/rdd-*"))
 
 
-def test_connected_components_shared_durable_dir_no_collision(spark, tmp_path):
-    """Two runs sharing a durable_dir get disjoint run-N subtrees, so
-    the first run's lazily-backed result is NOT mutated by the second
-    run (ADVICE r2: fixed alternating paths collided)."""
+def test_connected_components_shared_durable_dir_no_collision(
+    spark, checkpoint_dir, monkeypatch
+):
+    """Two loop runs under one checkpoint directory write their pins to
+    separate rdd-N directories, so the first run's lazily evaluated
+    result is NOT changed by the second run (ADVICE r2: fixed
+    alternating paths collided)."""
+    monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", 0)  # run the loop's pins
     e1 = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
     e2 = spark.createDataFrame([(7, 8)], "doc_a long, doc_b long")
-    r1 = dedup.connected_components(e1, durable_dir=str(tmp_path))
-    r2 = dedup.connected_components(e2, durable_dir=str(tmp_path))
+    r1 = dedup.connected_components(e1)
+    r2 = dedup.connected_components(e2)
     # collect r1 AFTER running r2: with colliding paths this would
     # read r2's files and lose r1's rows
     assert {(r.doc_id, r.cluster_id) for r in r2.collect()} == {(7, 7), (8, 7)}
     assert {(r.doc_id, r.cluster_id) for r in r1.collect()} == {
         (1, 1), (2, 1), (3, 1)}
-    assert (tmp_path / "run-0").exists() and (tmp_path / "run-1").exists()
 
 
 @on_both_cc_paths

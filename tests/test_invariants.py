@@ -171,3 +171,37 @@ def test_allowlist_has_no_stale_entries():
     live = {(rel, fn) for rel, fn, _ln, _m in _materialize_sites()}
     stale = [f"{rel}::{fn}" for (rel, fn) in ALLOWED_MATERIALIZE_SITES if (rel, fn) not in live]
     assert not stale, "stale allowlist entries (site no longer exists): " + "; ".join(stale)
+
+
+# ── invariant 3: every lineage cut goes through operators/_checkpoint.pin
+# Rationale: pin() reads the one durability policy (a reliable
+# checkpoint when the session has spark.checkpoint.dir, else a local
+# one). An inline localCheckpoint()/checkpoint() would skip that policy
+# and die with its executor even on a deployment that set the
+# directory, so the only calls allowed are pin()'s own.
+PIN_HOME = "operators/_checkpoint.py"
+_CUTS = {"localCheckpoint", "checkpoint"}
+
+
+def _cut_sites():
+    """Yield (relpath, lineno, method) for every localCheckpoint /
+    checkpoint call in package source."""
+    for path in _package_sources():
+        rel = os.path.relpath(path, PKG).replace(os.sep, "/")
+        for node in ast.walk(ast.parse(open(path).read())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _CUTS
+            ):
+                yield rel, node.lineno, node.func.attr
+
+
+def test_lineage_cuts_only_in_pin():
+    sites = list(_cut_sites())
+    stray = [f"{rel}:{ln} .{m}()" for rel, ln, m in sites if rel != PIN_HOME]
+    assert not stray, (
+        "lineage cut outside operators/_checkpoint.py — call pin() so "
+        "the session's checkpoint directory decides the kind: " + "; ".join(stray)
+    )
+    assert {m for rel, _ln, m in sites if rel == PIN_HOME} == _CUTS

@@ -141,22 +141,6 @@ def test_compact_parquet_refuses_self_overwrite(spark):
     assert spark.read.parquet(src).count() == 10
 
 
-def test_claim_run_dir_rejects_uri_schemes(tmp_path):
-    """Driver-local makedirs cannot claim hdfs://-style paths; reject
-    rather than create stray local dirs with no real mutual exclusion."""
-    import pytest
-
-    from dumbo_spark.operators.dedup import _claim_run_dir
-
-    for uri in ("hdfs://nn/tmp/runs", "s3a://bucket/runs"):
-        with pytest.raises(ValueError, match="local path"):
-            _claim_run_dir(uri)
-    # local paths still claim disjoint run-N dirs
-    a = _claim_run_dir(str(tmp_path))
-    b = _claim_run_dir(str(tmp_path))
-    assert a != b and os.path.isdir(a) and os.path.isdir(b)
-
-
 def test_cli_plan_subcommand():
     r = _cli("plan", "group_sum")
     assert r.returncode == 0, r.stderr[-1500:]

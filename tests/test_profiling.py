@@ -44,3 +44,22 @@ def test_measure_lets_a_failing_query_raise(spark, sf_dir):
 
     with pytest.raises(ValueError, match="bad plan"):
         measure(spark, broken, sf_dir, 3)
+
+
+def test_ab_tree_decides_only_on_ten_pairs_and_a_gap_wider_than_the_iqr():
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(__file__))
+    path = os.path.join(root, "tools", "ab_tree.py")
+    spec = importlib.util.spec_from_file_location("_ab_tree", path)
+    ab_tree = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ab_tree)
+
+    old = [1.0, 1.02, 0.98, 1.01, 0.99, 1.0, 1.03, 0.97, 1.0, 1.01]
+    # two pairs 25% apart: too few to decide
+    assert ab_tree.verdict([0.878, 0.9], [1.1, 1.1]).startswith("unresolved")
+    assert ab_tree.verdict(old, [t * 1.3 for t in old]).startswith("new SLOWER")
+    assert ab_tree.verdict(old, [t * 0.7 for t in old]).startswith("new FASTER")
+    # 10 of 10 pairs lost, but by less than the old tree's spread
+    assert ab_tree.verdict(old, [t * 1.01 for t in old]).startswith("unresolved")

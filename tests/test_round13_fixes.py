@@ -1,11 +1,14 @@
 """Round-13 fixes: checkpoint-helper promotion (ADVICE r12), the
-observable eager-release fallback (VERDICT r12 Next #6), pagerank's
-claimed durable run dirs, and release_persistent_rdds living in the
-runtime (session.py) instead of the oracle harness (testing.py)."""
+observable eager-release fallback (VERDICT r12 Next #6), pagerank runs
+sharing a checkpoint directory, and release_persistent_rdds living in
+the runtime (session.py) instead of the oracle harness (testing.py)."""
 
+import ast
 import logging
+import os
 
 import pytest
+from conftest import checkpoint_dir_set
 
 from dumbo_spark.operators import _checkpoint, dedup
 
@@ -50,41 +53,46 @@ def test_checkpoint_helpers_shared_not_duplicated():
 
     assert graph._release_local_checkpoint is _checkpoint._release_local_checkpoint
     assert dedup._release_local_checkpoint is _checkpoint._release_local_checkpoint
-    assert dedup._claim_run_dir is _checkpoint._claim_run_dir
+    assert graph.pin is dedup.pin is _checkpoint.pin
 
 
 def test_release_persistent_rdds_is_a_runtime_utility():
-    """bench.py imports release_persistent_rdds from session.py so a
-    bench-only environment without duckdb/pandas can run; testing.py
-    re-exports the same object for existing callers."""
+    """bench.py imports nothing from dumbo_spark.testing, so a
+    bench-only environment without duckdb can run; testing.py
+    re-exports session's release_persistent_rdds for existing callers."""
     from dumbo_spark import session, testing
 
     assert testing.release_persistent_rdds is session.release_persistent_rdds
-    bench_src = open("bench.py").read()
-    assert "from dumbo_spark.session import release_persistent_rdds" in bench_src
-    assert "from dumbo_spark.testing import" not in bench_src
+    bench = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
+    modules = set()
+    for node in ast.walk(ast.parse(open(bench).read())):
+        if isinstance(node, ast.ImportFrom):
+            modules.add(node.module or "")
+        elif isinstance(node, ast.Import):
+            modules.update(alias.name for alias in node.names)
+    assert "dumbo_spark.session" in modules  # the walk sees bench's imports
+    assert not {m for m in modules if m.startswith("dumbo_spark.testing")}
 
 
 def test_pagerank_shared_durable_dir_no_collision(spark, tmp_path):
-    """Two pagerank runs sharing a durable_dir get disjoint run-N
-    subtrees (ADVICE r12: fixed pr_edges/pr_deg/pr_adj/ranks paths
-    collided), so the first run's lazily-backed result is NOT mutated
-    by the second run."""
+    """Two pagerank runs under one checkpoint directory write their pins
+    to separate rdd-N directories (ADVICE r12: fixed
+    pr_edges/pr_deg/pr_adj/ranks paths collided), so the first run's
+    lazily evaluated result is NOT changed by the second run."""
     e1 = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
     e2 = spark.createDataFrame([(7, 8)], "doc_a long, doc_b long")
-    r1 = dedup.pagerank(e1, max_iter=3, durable_dir=str(tmp_path))
-    r2 = dedup.pagerank(e2, max_iter=3, durable_dir=str(tmp_path))
-    # collect r1 AFTER running r2: with colliding paths this would
-    # read r2's files and lose r1's node set
-    got2 = {r.doc_id: r.rank for r in r2.collect()}
-    got1 = {r.doc_id: r.rank for r in r1.collect()}
-    assert set(got2) == {7, 8}
-    assert set(got1) == {1, 2, 3}
-    assert (tmp_path / "run-0" / "pr_adj").exists()
-    assert (tmp_path / "run-1" / "pr_adj").exists()
-    # durable mode must agree with the localCheckpoint default
     local1 = {r.doc_id: r.rank for r in dedup.pagerank(e1, max_iter=3).collect()}
+    with checkpoint_dir_set(spark.sparkContext, tmp_path):
+        r1 = dedup.pagerank(e1, max_iter=3)
+        r2 = dedup.pagerank(e2, max_iter=3)
+        # collect r1 AFTER running r2: with colliding paths this would
+        # read r2's files and lose r1's node set
+        got2 = {r.doc_id: r.rank for r in r2.collect()}
+        got1 = {r.doc_id: r.rank for r in r1.collect()}
+    assert set(got2) == {7, 8}
+    # the reliable pins agree with the local-pin default
     assert got1 == pytest.approx(local1)
+    assert list(tmp_path.glob("*/rdd-*"))
 
 
 def _py_bpe_batched(word_counts, n_rounds, batch_k):

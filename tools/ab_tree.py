@@ -6,7 +6,7 @@ r14 commit) in strictly alternating fresh processes — interleaving is
 what cancels machine-window drift, the dominant noise source on this
 host (same-code driver runs differ per-query by up to 5.4x).
 
-    python tools/ab_tree.py <old_tree> <query> [rounds=5]
+    python tools/ab_tree.py <old_tree> <query> [rounds=10]
 
 Each round runs both trees, one fresh process each, and alternates
 which tree goes first so a drifting host does not favour either; a
@@ -17,7 +17,10 @@ caches and pins released after every run). Both children load
 ``profiling.py`` by file path from the tree this script runs from, so
 the measuring code is the same on both sides and a tree without
 ``profiling.py`` can still be measured. Prints a per-round table plus
-medians and a verdict.
+medians and a verdict: a tree is FASTER or SLOWER only over at least
+10 pairs, winning at least 9 in 10 of them, by a median gap wider
+than the old tree's interquartile range; anything else is
+"unresolved".
 """
 
 from __future__ import annotations
@@ -27,6 +30,10 @@ import os
 import statistics
 import subprocess
 import sys
+
+#: the decision standard: pairs, the share a tree must win
+MIN_PAIRS = 10
+WIN_SHARE = 0.9
 
 _HERE_TREE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PROFILING = os.path.join(_HERE_TREE, "dumbo_spark", "profiling.py")
@@ -66,10 +73,29 @@ def run_one(tree: str, name: str) -> dict:
     return json.loads(lines[-1])
 
 
+def verdict(olds: list[float], news: list[float]) -> str:
+    """The verdict over paired per-round medians (old[i], new[i])."""
+    if len(olds) < MIN_PAIRS:
+        return f"unresolved ({len(olds)} pairs, need {MIN_PAIRS})"
+    q1, _, q3 = statistics.quantiles(olds, n=4)
+    gap = statistics.median(news) - statistics.median(olds)
+    need = WIN_SHARE * len(olds)
+    faster = sum(n < o for o, n in zip(olds, news))
+    slower = sum(n > o for o, n in zip(olds, news))
+    if faster >= need and -gap > q3 - q1:
+        return f"new FASTER (won {faster} of {len(olds)} pairs)"
+    if slower >= need and gap > q3 - q1:
+        return f"new SLOWER (lost {slower} of {len(olds)} pairs; revert candidate)"
+    return (
+        f"unresolved (new won {faster}, lost {slower} of {len(olds)} pairs; "
+        f"median gap {gap:+.3f} s vs old IQR {q3 - q1:.3f} s)"
+    )
+
+
 def main() -> None:
     old_tree = sys.argv[1]
     name = sys.argv[2]
-    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 5
+    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else MIN_PAIRS
     new_tree = _HERE_TREE
     olds, news = [], []
     print(f"query={name} old={old_tree} new={new_tree} rounds={rounds}")
@@ -88,15 +114,8 @@ def main() -> None:
             f"new={n['median']} {n['runs']}"
         )
     mo, mn = statistics.median(olds), statistics.median(news)
-    print(f"medians: old={mo} new={mn} ratio_new/old={mn / mo:.3f}")
-    print(
-        "verdict: "
-        + (
-            "new SLOWER (revert candidate)"
-            if mn > 1.15 * mo
-            else "new not slower"
-        )
-    )
+    print(f"medians: old={mo:.3f} new={mn:.3f} ratio_new/old={mn / mo:.3f}")
+    print(f"verdict: {verdict(olds, news)}")
 
 
 if __name__ == "__main__":
