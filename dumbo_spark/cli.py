@@ -228,7 +228,7 @@ def cmd_plan(args: argparse.Namespace) -> int:
         "bnl_joins",
         "unpart_windows",
     ):
-        print(f"{k}: {s[k]}")
+        print(f"{k}: {'unknown' if s[k] is None else s[k]}")
     if args.verbose:
         print(s["plan"])
     return 0

@@ -25,12 +25,12 @@ Two caveats apply to EVERY pin site:
   the query. Set ``spark.checkpoint.dir`` (or call
   ``sparkContext.setCheckpointDir``) and every pin becomes a reliable
   ``checkpoint`` written to that directory, which survives executor
-  loss. A reliable pin costs one extra job per pin, the write (a probe
-  that ran 5 jobs with local pins ran 6 with reliable ones), which
-  evaluates the pinned frame a second time because Spark does not cache
-  it; its files stay until
-  ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on and the
-  frame is garbage-collected. ``.persist()`` sites are
+  loss. A reliable pin is always EAGER: Spark writes a lazy one in a
+  second job after the first action, and that job evaluates the pinned
+  frame again because nothing caches it (a 1,000-row Python UDF ran
+  2,000 times through a lazy reliable pin, 1,000 times through an eager
+  one or a local pin). Its ``rdd-N`` files are deleted by the same
+  releases that free a local pin's blocks. ``.persist()`` sites are
   caches, not cuts: a lost block is recomputed from lineage, which
   ends at a pin.
 """
@@ -49,20 +49,31 @@ _release_fallback_warned = False
 
 
 def pin(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Cut ``df``'s lineage: a reliable ``checkpoint`` when the session
-    has a checkpoint directory, else a ``localCheckpoint``.
+    """Cut ``df``'s lineage: an eager reliable ``checkpoint`` when the
+    session has a checkpoint directory, else a ``localCheckpoint``.
 
-    ``eager=False`` materializes the pin with the first action over
-    the returned frame, in that action's job. The choice reads a
-    setting Spark already has, so there is no engine option for it.
+    ``eager=False`` materializes a local pin with the first action over
+    the returned frame, in that action's job; a reliable pin ignores it
+    (see the module docstring). The choice reads a setting Spark
+    already has, so there is no engine option for it.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager)
+        return df.checkpoint(eager=True)
     return df.localCheckpoint(eager)
 
 
+def _delete_checkpoint_files(sc, path: str) -> None:
+    """Delete every file matching ``path`` (a Hadoop glob) through the
+    checkpoint directory's own file system."""
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    for status in fs.globStatus(jpath) or []:
+        fs.delete(status.getPath(), True)
+
+
 def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free a pinned DataFrame's storage blocks NOW.
+    """Free a pinned DataFrame's storage NOW: a local pin's blocks, a
+    reliable pin's ``rdd-N`` files.
 
     The iterative loops replace their label/rank table every round;
     the previous round's checkpoint becomes garbage the moment the new
@@ -70,9 +81,9 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     py4j detach + JVM GC get around to them — in a long shared session
     (the driver's correctness harness, a user notebook) those stale
     rounds accumulate executor memory (measured: a 4× slowdown of an
-    iterative query after two others ran in the same session). A
-    reliable pin holds no blocks, so this frees nothing for it; its
-    files stay as the module docstring says. Best-effort by design: it
+    iterative query after two others ran in the same session), and a
+    reliable pin's files stay on disk until Spark's cleaner (off by
+    default) deletes them. Best-effort by design: it
     reaches the plan's LogicalRDD through internal accessors, so any
     API drift just falls back to GC-timed release rather than failing
     the query — but that fallback is now OBSERVABLE (VERDICT r12 Next
@@ -83,17 +94,21 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     """
     global _release_fallback_warned
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.unpersist(False)
+        path = rdd.getCheckpointFile()
+        if path.isDefined():
+            _delete_checkpoint_files(df.sparkSession.sparkContext, path.get())
     except Exception as exc:  # noqa: BLE001 — documented best-effort path
         if not _release_fallback_warned:
             _release_fallback_warned = True
             _log.warning(
-                "eager localCheckpoint release failed (%s: %s); iterative "
+                "eager pin release failed (%s: %s); iterative "
                 "operators fall back to GC-timed block release for this "
                 "process — expect shared-session memory inflation",
                 type(exc).__name__,
                 exc,
             )
         else:
-            _log.debug("eager localCheckpoint release failed again: %s", exc)
+            _log.debug("eager pin release failed again: %s", exc)
 

@@ -38,57 +38,7 @@ def copurchase_triangles(
     triangle counts — the clustering-structure summary of a
     co-occurrence graph.
     """
-    # pin() truncates lineage, not just caches it: the edge
-    # subtree feeds FIVE downstream branches (degree, both wedge legs,
-    # closing set, node/edge counts), and with plain persist Catalyst
-    # re-embeds and re-optimizes the whole edge-construction subplan
-    # per branch — the plan string grows combinatorially (~800 phantom
-    # exchanges in the audit) even though the cache dedupes execution.
-    # Checkpointing makes each branch read a flat cached scan (same
-    # pattern as the iterative CC in operators/dedup.py).
-    edges = pin(_copurchase_edges(lineitem, min_cooccur, max_basket), eager=True)
-    # Degree-ordered enumeration (Chiba–Nishizeki / the MapReduce
-    # triangle-counting standard): re-orient every edge from its
-    # lower-(degree, id) endpoint to its higher one. Orientation by the
-    # total order (deg, id) is acyclic and gives max out-degree
-    # O(√m), so the wedge self-join below fans out by out-degree² per
-    # node instead of degree² — on a co-purchase graph whose hub
-    # products have huge degrees, this is the difference between the
-    # plan surviving a dense graph and quadratic blowup at the hubs.
-    # deg is referenced twice (both orientation joins) — lazy-checkpoint
-    # so the explode+groupBy over the edge list runs once, not per branch
-    deg = pin(
-        edges.select(F.explode(F.array("src", "dst")).alias("v"))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
-    oriented = pin(
-        edges.join(deg.withColumnRenamed("v", "src").withColumnRenamed("deg", "ds"), "src")
-        .join(deg.withColumnRenamed("v", "dst").withColumnRenamed("deg", "dd"), "dst")
-        .select(
-            F.when(
-                (F.col("ds") < F.col("dd"))
-                | ((F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))),
-                F.struct(
-                    F.col("src").alias("lo"),
-                    F.col("dst").alias("hi"),
-                    F.col("ds").alias("dlo"),
-                    F.col("dd").alias("dhi"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.col("dst").alias("lo"),
-                    F.col("src").alias("hi"),
-                    F.col("dd").alias("dlo"),
-                    F.col("ds").alias("dhi"),
-                )
-            )
-            .alias("e")
-        )
-        .select("e.lo", "e.hi", "e.dlo", "e.dhi"),
-        eager=True,
-    )
+    edges, _deg, oriented = _oriented_copurchase(lineitem, min_cooccur, max_basket)
     # wedges at the lowest-ordered node: two out-edges of the same lo
     # (hash equi-join on lo; the strict (deg, id) tie-broken inequality
     # keeps each unordered wedge once). An array-collect + HOF
@@ -126,6 +76,75 @@ def copurchase_triangles(
     )
 
 
+def _degrees(edges: DataFrame, name: str) -> DataFrame:
+    """(v, ``name``) endpoint degrees of an (src, dst) edge list: one
+    explode(array(src, dst)) so the edge frame is scanned once, not once
+    per union branch (r15)."""
+    return (
+        edges.select(F.explode(F.array("src", "dst")).alias("v"))
+        .groupBy("v")
+        .agg(F.count("*").alias(name))
+    )
+
+
+def _oriented_copurchase(
+    lineitem: DataFrame, min_cooccur: int, max_basket: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The pinned front of the triangle operators: the co-purchase
+    ``edges``, their (v, deg) degrees and the ``oriented`` (lo, hi, dlo,
+    dhi) edge list.
+
+    pin() truncates lineage, not just caches it: the edge subtree feeds
+    five downstream branches (degree, both wedge legs, closing set,
+    node/edge counts), and with plain persist Catalyst re-embeds and
+    re-optimizes the whole edge-construction subplan per branch — the
+    plan string grows combinatorially (~800 phantom exchanges in the
+    audit) even though the cache dedupes execution.
+
+    Degree-ordered enumeration (Chiba–Nishizeki / the MapReduce
+    triangle-counting standard): every edge is re-oriented from its
+    lower-(degree, id) endpoint to its higher one. Orientation by the
+    total order (deg, id) is acyclic and gives max out-degree O(√m), so
+    a wedge self-join on ``lo`` fans out by out-degree² per node instead
+    of degree² — on a co-purchase graph whose hub products have huge
+    degrees, this is the difference between the plan surviving a dense
+    graph and quadratic blowup at the hubs. ``deg`` is referenced by
+    both orientation joins (and the clustering coefficient's final
+    join), so it is pinned lazily: the explode+groupBy runs once, in the
+    ``oriented`` pin's job.
+    """
+    edges = pin(_copurchase_edges(lineitem, min_cooccur, max_basket), eager=True)
+    deg = pin(_degrees(edges, "deg"))
+    oriented = pin(
+        edges.join(deg.withColumnRenamed("v", "src").withColumnRenamed("deg", "ds"), "src")
+        .join(deg.withColumnRenamed("v", "dst").withColumnRenamed("deg", "dd"), "dst")
+        .select(
+            F.when(
+                (F.col("ds") < F.col("dd"))
+                | ((F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))),
+                F.struct(
+                    F.col("src").alias("lo"),
+                    F.col("dst").alias("hi"),
+                    F.col("ds").alias("dlo"),
+                    F.col("dd").alias("dhi"),
+                ),
+            )
+            .otherwise(
+                F.struct(
+                    F.col("dst").alias("lo"),
+                    F.col("src").alias("hi"),
+                    F.col("dd").alias("dlo"),
+                    F.col("ds").alias("dhi"),
+                )
+            )
+            .alias("e")
+        )
+        .select("e.lo", "e.hi", "e.dlo", "e.dhi"),
+        eager=True,
+    )
+    return edges, deg, oriented
+
+
 def _copurchase_edges(
     lineitem: DataFrame, min_cooccur: int = 2, max_basket: int = 20
 ) -> DataFrame:
@@ -150,12 +169,7 @@ def degree_histogram(lineitem: DataFrame) -> DataFrame:
     re-executing the edge construction) disappears along with its
     materialization job (r15 optimization, guide §1.2/§2.4: one pass,
     no extra action)."""
-    deg = (
-        _copurchase_edges(lineitem)
-        .select(F.explode(F.array("src", "dst")).alias("v"))
-        .groupBy("v")
-        .agg(F.count("*").alias("degree"))
-    )
+    deg = _degrees(_copurchase_edges(lineitem), "degree")
     return deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
 
 
@@ -181,14 +195,7 @@ def kcore_nodes(
     """
     edges = pin(_copurchase_edges(lineitem, min_cooccur, max_basket), eager=True)
     for _ in range(max_iter):
-        # explode(array(src, dst)) — same endpoint multiset as the old
-        # src/dst unionAll, but the cached edge RDD is scanned once per
-        # round instead of twice (r15)
-        deg = (
-            edges.select(F.explode(F.array("src", "dst")).alias("v"))
-            .groupBy("v")
-            .agg(F.count("*").alias("degree"))
-        )
+        deg = _degrees(edges, "degree")
         # checkpoint the (tiny) weak set so the degree aggregation runs
         # ONCE per round — lazily-unmaterialized it would execute twice,
         # once for the emptiness probe and again inside each anti-join's
@@ -542,43 +549,7 @@ def clustering_coefficient(
 
     Output: (part, degree, n_triangles, clustering_coeff).
     """
-    edges = pin(_copurchase_edges(lineitem, min_cooccur, max_basket), eager=True)
-    # deg is referenced THREE times (both orientation joins + the final
-    # left join) — lazy-checkpoint it so the explode+groupBy over the
-    # edge list runs once instead of per branch (no extra job; the
-    # query's own action materializes it)
-    deg = pin(
-        edges.select(F.explode(F.array("src", "dst")).alias("v"))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
-    oriented = pin(
-        edges.join(deg.withColumnRenamed("v", "src").withColumnRenamed("deg", "ds"), "src")
-        .join(deg.withColumnRenamed("v", "dst").withColumnRenamed("deg", "dd"), "dst")
-        .select(
-            F.when(
-                (F.col("ds") < F.col("dd"))
-                | ((F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))),
-                F.struct(
-                    F.col("src").alias("lo"),
-                    F.col("dst").alias("hi"),
-                    F.col("ds").alias("dlo"),
-                    F.col("dd").alias("dhi"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.col("dst").alias("lo"),
-                    F.col("src").alias("hi"),
-                    F.col("dd").alias("dlo"),
-                    F.col("ds").alias("dhi"),
-                )
-            )
-            .alias("e")
-        )
-        .select("e.lo", "e.hi", "e.dlo", "e.dhi"),
-        eager=True,
-    )
+    _edges, deg, oriented = _oriented_copurchase(lineitem, min_cooccur, max_basket)
     w1, w2 = oriented.alias("w1"), oriented.alias("w2")
     wedges = w1.join(
         w2,

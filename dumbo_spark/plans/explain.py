@@ -26,7 +26,7 @@ def _formatted(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def unpartitioned_windows(plan: str) -> int:
+def unpartitioned_windows(plan: str) -> int | None:
     """Count Window nodes with NO partition spec — the plan-level
     signature of ``Window.orderBy(...)`` without ``partitionBy``, which
     moves all input of that node to a single task. A Window line
@@ -36,8 +36,14 @@ def unpartitioned_windows(plan: str) -> int:
     sites (k-row ``limit`` heads, daily/bucket rollups) are fine and
     carry their rationale in tools/plan_report.py's WINDOW_BOUNDED
     allowlist; anything else is a scale bug.
+
+    Returns None (unknown) when a Window line cannot be classified:
+    ``spark.sql.debug.maxToStringFields`` truncation (``... N more
+    fields``) can swallow a closing bracket or the order group's sort
+    direction, and such a line is not evidence of a clean plan.
     """
     n = 0
+    unknown = False
     for line in plan.splitlines():
         m = re.search(r"\bWindow \[", line)
         if not m:
@@ -58,12 +64,15 @@ def unpartitioned_windows(plan: str) -> int:
         # ambiguous: partitionBy-without-orderBy ([exprs], [part], fine)
         # vs orderBy-without-partitionBy ([exprs], [order], single-task).
         # An order group always prints sort direction; a partition group
-        # never does.
-        if len(groups) == 2 and re.search(
-            r"(ASC|DESC) NULLS", groups[1]
-        ):
+        # never does — unless truncation cut it off.
+        ordered = len(groups) == 2 and re.search(r"(ASC|DESC) NULLS", groups[1])
+        if ordered:
             n += 1
-    return n
+        elif depth != 0 or len(groups) < 2 or (
+            len(groups) == 2 and re.search(r"\.\.\. \d+ more fields", line)
+        ):
+            unknown = True
+    return None if unknown else n
 
 
 def physical_summary(df: DataFrame) -> dict:

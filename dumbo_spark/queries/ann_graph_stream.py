@@ -1375,13 +1375,13 @@ def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream interval join (streaming/runners.py::
-    streaming_attribution_outer, VERDICT r4 #7): unmatched clicks
+    streaming_attribution, how="leftOuter"; VERDICT r4 #7): unmatched clicks
     surface as null-purchase rows once the watermark closes their
     window — sentinel files drive the final watermark so the settled
     availableNow output equals the batch LEFT JOIN oracle."""
-    from dumbo_spark.streaming.runners import streaming_attribution_outer
+    from dumbo_spark.streaming.runners import streaming_attribution
 
-    return streaming_attribution_outer(spark, sf_dir)
+    return streaming_attribution(spark, sf_dir, how="leftOuter")
 
 
 @register(
@@ -1400,12 +1400,12 @@ def q_streaming_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def q_streaming_attribution_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER stream-stream interval join (streaming/runners.py::
-    streaming_attribution_full): unmatched clicks and organic
+    streaming_attribution, how="fullOuter"): unmatched clicks and organic
     purchases both emitted after watermark expiry; settled availableNow
     output equals the batch FULL JOIN oracle bit-for-bit."""
-    from dumbo_spark.streaming.runners import streaming_attribution_full
+    from dumbo_spark.streaming.runners import streaming_attribution
 
-    return streaming_attribution_full(spark, sf_dir)
+    return streaming_attribution(spark, sf_dir, how="fullOuter")
 
 
 @register(
@@ -1425,13 +1425,13 @@ def q_streaming_attribution_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_attribution_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI stream-stream interval join (streaming/runners.py::
-    streaming_attribution_semi): attributed clicks emitted once each —
+    streaming_attribution, how="left_semi"): attributed clicks emitted once each —
     the existence-only member that completes the streaming join-type
     matrix (inner / left outer / full outer / left semi); settled
     availableNow output equals the batch EXISTS oracle bit-for-bit."""
-    from dumbo_spark.streaming.runners import streaming_attribution_semi
+    from dumbo_spark.streaming.runners import streaming_attribution
 
-    return streaming_attribution_semi(spark, sf_dir)
+    return streaming_attribution(spark, sf_dir, how="left_semi")
 
 
 @register(
@@ -1449,14 +1449,14 @@ def q_streaming_attribution_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_attribution_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once LEFT OUTER attribution (streaming/runners.py::
-    streaming_attribution_dedup, VERDICT r5 #7): every purchase half
+    streaming_attribution, purchase_copies=2; VERDICT r5 #7): every purchase half
     delivered twice; dropDuplicatesWithinWatermark ahead of the
     symmetric-hash outer join restores exactly-once semantics, so the
     settled output hash-matches the duplicate-free batch LEFT JOIN
     oracle (streaming_attribution_outer's, verbatim)."""
-    from dumbo_spark.streaming.runners import streaming_attribution_dedup
+    from dumbo_spark.streaming.runners import streaming_attribution
 
-    return streaming_attribution_dedup(spark, sf_dir)
+    return streaming_attribution(spark, sf_dir, how="leftOuter", purchase_copies=2)
 
 
 @register(

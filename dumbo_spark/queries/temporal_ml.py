@@ -131,9 +131,9 @@ def q_events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of streaming/windows.py::click_purchase_stream_join —
-    the SAME function body (watermarks are no-ops on static frames), so
-    this oracle transitively checks the stream-stream interval join the
-    streaming test proves equal to it."""
+    the SAME call on static frames (no watermark), so this oracle
+    transitively checks the stream-stream interval join the streaming
+    test proves equal to it."""
     from dumbo_spark.streaming.windows import click_purchase_stream_join
 
     ev = load_table(spark, sf_dir, "events")

@@ -423,13 +423,23 @@ def release_persistent_rdds(spark: SparkSession) -> int:
     two others in the same session). Returns the number released.
     Call between queries whose timing or memory should be isolated.
 
+    Under a checkpoint directory it also deletes every reliable pin's
+    ``rdd-N`` files there (Spark deletes them only when
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on and the
+    frame is garbage-collected).
+
     Lives here (not dumbo_spark.testing) so bench-only environments
     without duckdb/pandas can import it — it is a runtime utility, not
     an oracle-harness helper (ADVICE r12).
     """
-    jrdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    sc = spark.sparkContext
+    jrdds = list(sc._jsc.getPersistentRDDs().values())
     for jrdd in jrdds:
         jrdd.unpersist()
+    if sc.getCheckpointDir() is not None:
+        from dumbo_spark.operators._checkpoint import _delete_checkpoint_files
+
+        _delete_checkpoint_files(sc, sc.getCheckpointDir() + "/rdd-*")
     return len(jrdds)
 
 

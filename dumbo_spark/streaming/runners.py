@@ -4,10 +4,12 @@ Each runner executes a genuinely-streaming query (file source →
 stateful operator → memory sink, ``trigger(availableNow=True)``) over
 the parquet fixtures and returns the settled result as a batch
 DataFrame, so the driver's DuckDB oracle can hash-check the streaming
-operator the same way it checks batch queries. ``click_attribution``
-pioneered the pattern for the interval join; these cover the stateful
-running-totals operator (applyInPandasWithState) and watermark-bounded
-dedup.
+operator the same way it checks batch queries. Every runner hands its
+stream to ``windows.run_to_memory``, the one execute-and-snapshot entry
+point. One runner, :func:`streaming_attribution`, serves all five
+stream-stream attribution rows: it takes Spark's join type ``how`` and
+the purchase delivery count ``purchase_copies``, and derives its
+sentinels, sink name and scratch prefix from ``how``.
 
 Replay construction keeps the checks deterministic:
 
@@ -17,6 +19,9 @@ Replay construction keeps the checks deterministic:
   rows are identical, and a second-copy event older than the advanced
   watermark is late-DROPPED — also correct, it's a duplicate. Output
   is exactly the distinct event set.
+- attribution: each side split at one time boundary into chronological
+  halves, so the join never evicts a row a later purchase could match
+  (see :func:`streaming_attribution`).
 - running totals: events split across multiple files/micro-batches;
   per-user state accumulates in integer cents, so the final row per
   user is independent of file/batch assignment. The last emission per
@@ -34,6 +39,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dumbo_spark.sources.catalog import load_table
+from dumbo_spark.streaming.windows import run_to_memory
 
 # Scratch dirs (source slices, checkpoints, versioned state) backing
 # the LAZY DataFrames these runners return: the files must outlive the
@@ -111,26 +117,24 @@ def _sentinel_safe_bounds(ev: DataFrame):
 def _attribution_replay_sides(
     spark: SparkSession,
     ev: DataFrame,
-    prefix: str,
+    how: str,
     purchase_copies: int = 1,
-    sentinels: bool = True,
 ) -> dict[str, DataFrame]:
-    """The ONE half-split + sentinel replay construction behind all
-    five attribution runners (r11 review: four ~30-line copies plus a
-    fifth midpoint variant could desynchronize on a sentinel-recipe
-    fix). Per side: the event-type partition split at the time-range
-    midpoint into two chronological one-file halves (each written
-    ``purchase_copies`` times for the purchases side — the
-    at-least-once replay), then optionally two far-future sentinel
+    """The ONE half-split + sentinel replay construction behind the
+    attribution runner. Per side: the event-type partition split at the
+    time-range midpoint into two chronological one-file halves (each
+    written ``purchase_copies`` times for the purchases side — the
+    at-least-once replay), then, unless ``how`` is ``inner`` (which
+    emits on match and waits on no watermark), two far-future sentinel
     files (event_id/user_id = −1, max_ts + 30/60 days) that drive the
     final watermark past every real interval; every file mtime-stamped
     in delivery order (ADVICE r9). Returns {"clicks": stream,
-    "purchases": stream}."""
+    "purchases": stream}, each watermarked by 2 hours on ``ts``."""
     from datetime import timedelta
 
     b = _sentinel_safe_bounds(ev)
     mid = b["mn"] + (b["mx"] - b["mn"]) / 2
-    base = _scratch_dir(prefix=prefix)
+    base = _scratch_dir(prefix=f"dumbo_spark_attr_{how}_")
     sides = {}
     for side, etype, copies in (
         ("clicks", "click", 1),
@@ -149,7 +153,7 @@ def _attribution_replay_sides(
                 half.coalesce(1).write.mode("overwrite").parquet(p)
                 _stamp_replay_order(p, seq)
                 seq += 1
-        if sentinels:
+        if how != "inner":
             for days in (30, 60):
                 sent = (
                     ev.limit(1)
@@ -171,18 +175,9 @@ def _attribution_replay_sides(
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{d}/*")
+            .withWatermark("ts", "2 hours")
         )
     return sides
-
-
-def _run_to_memory(stream_df: DataFrame, name: str, mode: str) -> DataFrame:
-    # one implementation of the execute-and-snapshot entry point — the
-    # runners used to carry a private copy of windows.run_to_memory,
-    # so a fix to one (e.g. the r11 result-snapshot) could miss the
-    # other (r11 review finding)
-    from dumbo_spark.streaming.windows import run_to_memory
-
-    return run_to_memory(stream_df.sparkSession, stream_df, name, mode)
 
 
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,7 +201,7 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    out = _run_to_memory(
+    out = run_to_memory(
         dedup_stream(stream), "q_streaming_dedup_sink", mode="append"
     )
     return out.select("event_id", "user_id", "event_type", "value")
@@ -233,7 +228,7 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    updates = _run_to_memory(
+    updates = run_to_memory(
         running_user_totals(stream), "q_streaming_totals_sink", mode="update"
     )
     # final row per user = largest total_events (strictly increasing
@@ -282,7 +277,7 @@ def streaming_enriched_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(F.broadcast(cust), "user_id").groupBy(
         "c_mktsegment", "event_type"
     ).agg(F.count("*").alias("n_events"), dsum("value", "sum_value"))
-    return _run_to_memory(
+    return run_to_memory(
         enriched, "q_streaming_enriched_sink", mode="complete"
     )
 
@@ -295,7 +290,7 @@ def streaming_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dumbo_spark.streaming.windows import read_events_stream, tumbling_stream
 
     stream = tumbling_stream(read_events_stream(spark, sf_dir))
-    return _run_to_memory(stream, "q_streaming_tumbling_sink", mode="complete")
+    return run_to_memory(stream, "q_streaming_tumbling_sink", mode="complete")
 
 
 def streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,7 +300,7 @@ def streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dumbo_spark.streaming.windows import read_events_stream, sessionized_stream
 
     stream = sessionized_stream(read_events_stream(spark, sf_dir))
-    return _run_to_memory(stream, "q_streaming_sessionized_sink", mode="complete")
+    return run_to_memory(stream, "q_streaming_sessionized_sink", mode="complete")
 
 
 def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -334,7 +329,7 @@ def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    emitted = _run_to_memory(
+    emitted = run_to_memory(
         transition_counts_stream(stream), "q_streaming_trans_sink", mode="append"
     )
     m = emitted.groupBy("event_type", "next_type").agg(F.sum("n").alias("n"))
@@ -344,11 +339,15 @@ def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+def streaming_attribution(
+    spark: SparkSession, sf_dir: str, how: str = "inner", purchase_copies: int = 1
+) -> DataFrame:
     """TRUE stream-stream interval join (windows.py::
-    click_purchase_stream_join) — clicks and purchases arrive as two
-    separate file streams in time-ordered micro-batches, and Spark's
-    watermarked symmetric hash join buffers/evicts both sides.
+    click_purchase_stream_join with Spark's join type ``how``): clicks
+    and purchases arrive as two separate watermarked file streams in
+    time-ordered micro-batches, and Spark's symmetric hash join
+    buffers/evicts both sides. The settled output equals the batch join
+    of the same ``how`` bit-for-bit — the oracle the driver checks.
 
     Losslessness under eviction, by construction: each side is split
     at the SAME time boundary into chronological halves replayed
@@ -357,117 +356,42 @@ def streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes click_ts + 30min — i.e. clicks older than max(ts_k) − 2.5h.
     Every batch-k+1 purchase is newer than max(ts_k) and can only match
     clicks newer than purchase_ts − 30min > max(ts_k) − 30min, all
-    still buffered. Hence the streamed result equals the batch join
-    bit-for-bit (same oracle as ``click_attribution``), while state
-    stays bounded by rate × 2.5h — the forever-run property.
+    still buffered. State stays bounded by rate × 2.5h — the forever-run
+    property.
+
+    Outer and semi joins emit null-extended (or settled) rows only once
+    the watermark proves the 30-minute window closed, so their replay
+    adds two SENTINEL files per side (max_ts + 30/60 days, ids −1): the
+    first makes every real row evictable, the second plus Spark's
+    no-data micro-batch runs the eviction. Sentinel rows are dropped on
+    ``coalesce(id, 0) >= 0`` over every id column of the output.
+
+    ``purchase_copies > 1`` replays an AT-LEAST-ONCE purchase feed (VERDICT
+    r5 #7): every purchase half is delivered that many times in
+    consecutive micro-batches, and ``dropDuplicatesWithinWatermark``
+    ahead of the join restores exactly-once input. A duplicate lands
+    one micro-batch after its original, when the purchase watermark is
+    max(ts of the half) − 2h: younger duplicates are caught by dedup
+    STATE (a key is evicted only once the watermark passes ts + 2h),
+    older ones by the WATERMARK itself, and no FIRST delivery is ever
+    late (each half's minimum ts exceeds the previous half's
+    watermark). The within-watermark form keeps dedup state bounded by
+    rate × delay, where plain streaming dropDuplicates keeps every key
+    forever.
     """
     from dumbo_spark.streaming.windows import click_purchase_stream_join
 
     ev = load_table(spark, sf_dir, "events")
-    # no sentinels: the inner join emits on match, nothing waits on
-    # watermark expiry (the midpoint is the shared helper's — a ≤1µs
-    # shift vs the old unix_micros average, which cannot change the
-    # half UNION the join consumes)
-    sides = _attribution_replay_sides(
-        spark, ev, "dumbo_spark_attr_", sentinels=False
-    )
-    joined = click_purchase_stream_join(sides["clicks"], sides["purchases"])
-    return _run_to_memory(joined, "q_streaming_attr_sink", mode="append")
-
-
-def streaming_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER stream-stream interval join (windows.py::
-    click_purchase_stream_left_join): every click row reaches the sink
-    — matched clicks with their purchases, unmatched clicks as
-    null-extended rows emitted once the watermark proves the 30-minute
-    window closed empty.
-
-    Replay construction on top of :func:`streaming_attribution`'s
-    chronological halves: two SENTINEL files per side (max_ts + 30/60
-    days, event_id = −1) drive the final watermark far past every real
-    ``click_ts + 30min``. The first sentinel batch makes every real
-    click's state evictable; eviction (and the null-row emission) runs
-    a trigger later — covered by the second sentinel batch plus
-    Spark's no-data micro-batch. Sentinel rows themselves are dropped
-    on ``click_id >= 0``. The settled output therefore equals the
-    batch LEFT JOIN bit-for-bit — the oracle the driver checks.
-    """
-    from dumbo_spark.streaming.windows import click_purchase_stream_left_join
-
-    ev = load_table(spark, sf_dir, "events")
-    sides = _attribution_replay_sides(spark, ev, "dumbo_spark_attro_")
-    joined = click_purchase_stream_left_join(sides["clicks"], sides["purchases"])
-    out = _run_to_memory(joined, "q_streaming_attr_outer_sink", mode="append")
-    return out.where(F.col("click_id") >= 0)
-
-
-def streaming_attribution_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER interval join fed an AT-LEAST-ONCE purchase replay
-    (windows.py::click_purchase_stream_left_join_dedup, VERDICT r5
-    #7): every purchase half is delivered TWICE in consecutive
-    micro-batches; dropDuplicatesWithinWatermark in front of the join
-    makes the settled output identical to the exactly-once run — the
-    batch LEFT JOIN oracle, unchanged.
-
-    Redelivery correctness, by construction: a duplicate copy lands
-    one micro-batch after its original, when the purchase watermark is
-    max(ts of the half) − 2h. Duplicates younger than that are caught
-    by dedup STATE (key still resident — eviction needs the watermark
-    to pass ts + 2h); older ones are dropped by the WATERMARK itself.
-    Either path removes the copy, and no FIRST delivery is ever late
-    (each half's minimum ts exceeds the previous half's watermark), so
-    exactly the distinct purchase set reaches the join. Sentinel files
-    as in streaming_attribution_outer drive the final watermark past
-    every click's window so null rows settle.
-    """
-    from dumbo_spark.streaming.windows import click_purchase_stream_left_join_dedup
-
-    ev = load_table(spark, sf_dir, "events")
-    sides = _attribution_replay_sides(
-        spark, ev, "dumbo_spark_attrd_", purchase_copies=2
-    )
-    joined = click_purchase_stream_left_join_dedup(
-        sides["clicks"], sides["purchases"]
-    )
-    out = _run_to_memory(joined, "q_streaming_attr_dedup_sink", mode="append")
-    return out.where(F.col("click_id") >= 0)
-
-
-def streaming_attribution_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER stream-stream interval join (windows.py::
-    click_purchase_stream_full_join): unmatched clicks AND
-    unattributed "organic" purchases both surface as null-extended
-    rows after watermark expiry — the complete join-type matrix over
-    the same replay construction as streaming_attribution_outer
-    (chronological halves + two sentinel files per side driving the
-    final watermark past every interval). Sentinels filter out on
-    ``event_id >= 0`` applied to whichever side is non-null."""
-    from dumbo_spark.streaming.windows import click_purchase_stream_full_join
-
-    ev = load_table(spark, sf_dir, "events")
-    sides = _attribution_replay_sides(spark, ev, "dumbo_spark_attrf_")
-    joined = click_purchase_stream_full_join(sides["clicks"], sides["purchases"])
-    out = _run_to_memory(joined, "q_streaming_attr_full_sink", mode="append")
-    return out.where(
-        F.coalesce(F.col("click_id"), F.lit(0)) >= 0
-    ).where(F.coalesce(F.col("purchase_id"), F.lit(0)) >= 0)
-
-
-def streaming_attribution_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI stream-stream interval join (windows.py::
-    click_purchase_stream_semi_join): attributed clicks emitted once
-    each — the existence-only member of the join matrix, over the same
-    replay construction as streaming_attribution_outer (chronological
-    halves + two sentinel files per side; sentinels guarantee settling
-    whichever emission policy the semi join uses, match-eager or
-    watermark-delayed). Sentinels filter out on ``click_id >= 0``."""
-    from dumbo_spark.streaming.windows import click_purchase_stream_semi_join
-
-    ev = load_table(spark, sf_dir, "events")
-    sides = _attribution_replay_sides(spark, ev, "dumbo_spark_attrs_")
-    joined = click_purchase_stream_semi_join(sides["clicks"], sides["purchases"])
-    out = _run_to_memory(joined, "q_streaming_attr_semi_sink", mode="append")
-    return out.where(F.col("click_id") >= 0)
+    sides = _attribution_replay_sides(spark, ev, how, purchase_copies)
+    purchases = sides["purchases"]
+    if purchase_copies > 1:
+        purchases = purchases.dropDuplicatesWithinWatermark(["event_id"])
+    joined = click_purchase_stream_join(sides["clicks"], purchases, how)
+    out = run_to_memory(joined, f"q_streaming_attr_{how}_sink", mode="append")
+    for c in out.columns:
+        if c.endswith("_id"):
+            out = out.where(F.coalesce(F.col(c), F.lit(0)) >= 0)
+    return out
 
 
 def streaming_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,7 +421,7 @@ def streaming_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_errors",
         )
     )
-    return _run_to_memory(stream, "q_streaming_error_bursts_sink", mode="complete")
+    return run_to_memory(stream, "q_streaming_error_bursts_sink", mode="complete")
 
 
 def _write_event_slices(
@@ -727,7 +651,7 @@ def streaming_hourly_distinct_checked(spark: SparkSession, sf_dir: str) -> DataF
             "n_events",
         )
     )
-    settled = _run_to_memory(agg, "q_streaming_hourly_distinct_sink", mode="complete")
+    settled = run_to_memory(agg, "q_streaming_hourly_distinct_sink", mode="complete")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(
@@ -772,7 +696,7 @@ def streaming_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(stream, "q_streaming_sliding_sink", mode="complete")
+    return run_to_memory(stream, "q_streaming_sliding_sink", mode="complete")
 
 
 def streaming_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -820,7 +744,7 @@ def streaming_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    emissions = _run_to_memory(
+    emissions = run_to_memory(
         greedy_packing_stream(stream), "q_streaming_pack_sink", mode="append"
     )
     from dumbo_spark.operators.packing import PACK_BUDGET
@@ -862,7 +786,7 @@ def streaming_p2_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    emitted = _run_to_memory(
+    emitted = run_to_memory(
         p2_quantile_stream(stream), "q_streaming_p2_sink", mode="append"
     )
     settled = emitted.groupBy("event_type").agg(

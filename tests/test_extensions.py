@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dumbo_spark.operators import agg, dedup, similarity, topk
+from dumbo_spark.operators._checkpoint import pin
 from dumbo_spark.sources.catalog import load_table
 
 DOC_SCHEMA = T.StructType(
@@ -273,10 +274,11 @@ def test_connected_components_chain_and_island(spark):
 
 
 @on_both_cc_paths
-def test_connected_components_durable_checkpoint(spark, tmp_path):
+def test_connected_components_durable_checkpoint(spark, tmp_path, monkeypatch):
     """Under a checkpoint directory every pin is a reliable checkpoint
     (the cluster-durability path): the rows equal the local-pin
-    default, and the pins are written under the directory."""
+    default, and the pins are written under the directory (seen as each
+    pin is taken: the stale-pin release deletes the files later)."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "doc_a long, doc_b long"
     )
@@ -284,6 +286,14 @@ def test_connected_components_durable_checkpoint(spark, tmp_path):
         (r.doc_id, r.cluster_id)
         for r in dedup.connected_components(edges).collect()
     }
+    written = []
+
+    def recording_pin(df, eager=False):
+        pinned = pin(df, eager)
+        written.extend(tmp_path.glob("*/rdd-*"))
+        return pinned
+
+    monkeypatch.setattr(dedup, "pin", recording_pin)
     with checkpoint_dir_set(spark.sparkContext, tmp_path):
         durable = {
             (r.doc_id, r.cluster_id)
@@ -291,7 +301,7 @@ def test_connected_components_durable_checkpoint(spark, tmp_path):
         }
     assert durable == local
     assert durable == {(i, 1) for i in range(1, 6)} | {(10, 10), (11, 10)}
-    assert list(tmp_path.glob("*/rdd-*"))
+    assert written
 
 
 def test_connected_components_shared_durable_dir_no_collision(

@@ -8,8 +8,23 @@ correctness test stays green."""
 from __future__ import annotations
 
 from dumbo_spark.operators import agg, joins, shape, topk
-from dumbo_spark.plans.explain import physical_summary
+from dumbo_spark.plans.explain import physical_summary, unpartitioned_windows
 from dumbo_spark.sources.catalog import load_table
+
+
+def test_unpartitioned_windows_reads_plan_lines_without_spark():
+    rank = "rank(x#1) windowspecdefinition(x#1 ASC NULLS FIRST) AS r#2"
+    partitioned = f"+- Window [{rank}], [k#3], [x#1 ASC NULLS FIRST]"
+    single_task = f"+- Window [{rank}], [x#1 ASC NULLS FIRST]"
+    assert unpartitioned_windows(f"{partitioned}\n{single_task}") == 1
+    # maxToStringFields truncation swallowed the order group and its
+    # closing bracket: the line is unknown, not clean
+    truncated = f"+- Window [{rank}], [k#3, ... 4 more fields"
+    assert unpartitioned_windows(f"{partitioned}\n{truncated}") is None
+    # a balanced line whose second group lost its sort direction to
+    # truncation is unknown too
+    no_direction = f"+- Window [{rank}, ... 2 more fields], [... 3 more fields]"
+    assert unpartitioned_windows(no_direction) is None
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

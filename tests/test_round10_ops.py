@@ -347,43 +347,6 @@ def test_streaming_p2_equals_the_single_pass_fold(spark, sf_dir):
         assert math.isfinite(want)
 
 
-def test_streaming_p2_state_carry_is_bit_exact(spark, tmp_path):
-    # direct emission-level check: the settled streaming estimate must
-    # equal the single-pass fold to the last bit — marker state carried
-    # across 3 micro-batches, rows sorted within each batch
-    import os
-
-    from pyspark.sql import functions as F
-
-    from dumbo_spark.streaming.runners import _run_to_memory, _stamp_replay_order
-    from dumbo_spark.streaming.stateful import p2_quantile_stream
-
-    vals = [((i * 48271) % 997) / 10.0 for i in range(200)]
-    rows = [(i, "t", float(v), i * 1000) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(
-        rows, "event_id long, event_type string, value double, ts_us long"
-    )
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for k in range(3):
-        lo, hi = k * 200 // 3, (k + 1) * 200 // 3
-        df.where((F.col("event_id") >= lo) & (F.col("event_id") < hi)).coalesce(
-            1
-        ).write.mode("overwrite").parquet(os.path.join(src, f"slice{k}.parquet"))
-        _stamp_replay_order(os.path.join(src, f"slice{k}.parquet"), k)
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/*")
-    )
-    emitted = _run_to_memory(
-        p2_quantile_stream(stream), "q_p2_bitexact_sink", mode="append"
-    ).collect()
-    settled = max(emitted, key=lambda r: r["n_seen"])
-    assert settled["n_seen"] == 200
-    assert settled["p2_estimate"] == _p2_python_fold(vals)  # BIT-exact
-
-
 # ── TPC-H Q2 / Q20 shapes ───────────────────────────────────────────────
 
 

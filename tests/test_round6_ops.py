@@ -1,6 +1,5 @@
 """Round-6 breadth operators: checked-tier completion (simhash,
-semantic), mixture planning, dense-sequence DQ, interval coverage,
-full-outer streaming attribution."""
+semantic), mixture planning, dense-sequence DQ, interval coverage."""
 
 from __future__ import annotations
 
@@ -152,21 +151,6 @@ def test_interval_coverage_merges_overlaps(spark):
     # union = 10:00-11:30 (90 min) + 14:00-14:10 (10 min)
     assert r["covered_us"] == 100 * 60 * 1_000_000
     assert r["n_intervals"] == 2
-
-
-def test_streaming_attribution_full_organic_purchases(spark, sf_dir):
-    """The full-outer runner must emit null-click rows for organic
-    purchases on top of the left-join rows."""
-    from dumbo_spark.streaming.runners import streaming_attribution_full
-
-    out = streaming_attribution_full(spark, sf_dir)
-    assert out.where(F.col("click_id").isNull()).count() > 0
-    assert out.where(F.col("purchase_id").isNull()).count() > 0
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").count()
-    assert out.where(F.col("click_id").isNotNull()).select(
-        "click_id"
-    ).distinct().count() == clicks
 
 
 def test_auc_roc_exact_known_values(spark):

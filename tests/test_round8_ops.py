@@ -74,36 +74,6 @@ def test_incremental_dedup_pruned_matches_unpruned(spark, sf_dir):
     assert rows(incremental_dedup_pruned(corpus, batch, bucket_bits=4)) == want
 
 
-def test_streaming_attribution_semi_matches_batch_exists(spark, sf_dir):
-    """Settled semi-join output = batch EXISTS semantics, one row per
-    attributed click (no fan-out on multi-purchase users)."""
-    from dumbo_spark.streaming.runners import streaming_attribution_semi
-
-    out = streaming_attribution_semi(spark, sf_dir)
-    got = sorted((r["user_id"], r["click_id"], r["click_us"]) for r in out.collect())
-    assert len(got) == len(set(got)), "each click must emit exactly once"
-
-    ev = load_table(spark, sf_dir, "events")
-    c = ev.where(F.col("event_type") == "click").alias("c")
-    p = ev.where(F.col("event_type") == "purchase").alias("p")
-    cond = (
-        (F.col("c.user_id") == F.col("p.user_id"))
-        & (F.col("p.ts") > F.col("c.ts"))
-        & (F.col("p.ts") <= F.col("c.ts") + F.expr("INTERVAL 30 MINUTES"))
-    )
-    want = sorted(
-        (r["user_id"], r["click_id"], r["click_us"])
-        for r in c.join(p, cond, "left_semi")
-        .select(
-            F.col("c.user_id").alias("user_id"),
-            F.col("c.event_id").alias("click_id"),
-            F.unix_micros(F.col("c.ts")).alias("click_us"),
-        )
-        .collect()
-    )
-    assert got == want
-
-
 def test_winnowed_dup_pairs_alignment_robust(spark):
     """The winnowing guarantee: a shared >= (w + k - 1)-token span is
     caught REGARDLESS of where it starts in each doc — including

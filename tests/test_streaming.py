@@ -21,7 +21,7 @@ def _rows(df, cols):
 
 def test_tumbling_stream_matches_batch(spark, sf_dir):
     stream = tumbling_stream(read_events_stream(spark, sf_dir))
-    got = run_to_memory(spark, stream, "t_tumbling")
+    got = run_to_memory(stream, "t_tumbling")
     want = batch_events.events_tumbling_1h(load_table(spark, sf_dir, "events"))
     cols = ["window_start", "event_type", "n_events", "sum_value"]
     assert _rows(got, cols) == _rows(want, cols)
@@ -126,7 +126,7 @@ def test_stream_static_enrichment(spark, sf_dir):
 
 def test_sessionized_stream_matches_batch(spark, sf_dir):
     stream = sessionized_stream(read_events_stream(spark, sf_dir))
-    got = run_to_memory(spark, stream, "t_sessions")
+    got = run_to_memory(stream, "t_sessions")
     want = batch_events.events_sessionized(load_table(spark, sf_dir, "events"))
     cols = ["user_id", "session_start_us", "n_events", "sum_value"]
     assert _rows(got, cols) == _rows(want, cols)
@@ -137,11 +137,11 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     equal the identical interval join on the static frames."""
     from dumbo_spark.streaming.windows import click_purchase_stream_join
 
-    ev_stream = read_events_stream(spark, sf_dir)
+    ev_stream = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     clicks_s = ev_stream.where(F.col("event_type") == "click")
     purch_s = ev_stream.where(F.col("event_type") == "purchase")
     got = run_to_memory(
-        spark, click_purchase_stream_join(clicks_s, purch_s), "t_ssjoin", mode="append"
+        click_purchase_stream_join(clicks_s, purch_s), "t_ssjoin", mode="append"
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -158,9 +158,9 @@ def test_attribution_dedup_matches_outer_despite_redelivery(spark, sf_dir):
     """The at-least-once replay (every purchase half delivered twice)
     through dropDuplicatesWithinWatermark + outer interval join must
     settle to the same rows as the exactly-once outer runner."""
-    from dumbo_spark.streaming.runners import streaming_attribution_dedup
+    from dumbo_spark.registry import QUERIES
 
-    out = streaming_attribution_dedup(spark, sf_dir)
+    out = QUERIES["streaming_attribution_dedup"].fn(spark, sf_dir)
     # no duplicate attribution rows despite double delivery
     assert out.count() == out.dropDuplicates(["click_id", "purchase_id"]).count()
     # every click surfaces exactly as in the batch left join
@@ -170,6 +170,87 @@ def test_attribution_dedup_matches_outer_despite_redelivery(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").count()
     assert out.select("click_id").distinct().count() == clicks
+
+
+def test_streaming_attribution_full_organic_purchases(spark, sf_dir):
+    """The full-outer row must emit null-click rows for organic
+    purchases on top of the left-join rows."""
+    from dumbo_spark.registry import QUERIES
+
+    out = QUERIES["streaming_attribution_full"].fn(spark, sf_dir)
+    assert out.where(F.col("click_id").isNull()).count() > 0
+    assert out.where(F.col("purchase_id").isNull()).count() > 0
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.where(F.col("event_type") == "click").count()
+    assert out.where(F.col("click_id").isNotNull()).select(
+        "click_id"
+    ).distinct().count() == clicks
+
+
+def test_streaming_attribution_semi_matches_batch_exists(spark, sf_dir):
+    """Settled semi-join output = batch EXISTS semantics, one row per
+    attributed click (no fan-out on multi-purchase users)."""
+    from dumbo_spark.registry import QUERIES
+
+    out = QUERIES["streaming_attribution_semi"].fn(spark, sf_dir)
+    got = sorted((r["user_id"], r["click_id"], r["click_us"]) for r in out.collect())
+    assert len(got) == len(set(got)), "each click must emit exactly once"
+
+    ev = load_table(spark, sf_dir, "events")
+    c = ev.where(F.col("event_type") == "click").alias("c")
+    p = ev.where(F.col("event_type") == "purchase").alias("p")
+    cond = (
+        (F.col("c.user_id") == F.col("p.user_id"))
+        & (F.col("p.ts") > F.col("c.ts"))
+        & (F.col("p.ts") <= F.col("c.ts") + F.expr("INTERVAL 30 MINUTES"))
+    )
+    want = sorted(
+        (r["user_id"], r["click_id"], r["click_us"])
+        for r in c.join(p, cond, "left_semi")
+        .select(
+            F.col("c.user_id").alias("user_id"),
+            F.col("c.event_id").alias("click_id"),
+            F.unix_micros(F.col("c.ts")).alias("click_us"),
+        )
+        .collect()
+    )
+    assert got == want
+
+
+def test_streaming_p2_state_carry_is_bit_exact(spark, tmp_path):
+    # direct emission-level check: the settled streaming estimate must
+    # equal the single-pass fold to the last bit — marker state carried
+    # across 3 micro-batches, rows sorted within each batch
+    import os
+
+    from dumbo_spark.streaming.runners import _stamp_replay_order
+    from dumbo_spark.streaming.stateful import p2_quantile_stream
+    from tests.test_round10_ops import _p2_python_fold
+
+    vals = [((i * 48271) % 997) / 10.0 for i in range(200)]
+    rows = [(i, "t", float(v), i * 1000) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(
+        rows, "event_id long, event_type string, value double, ts_us long"
+    )
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for k in range(3):
+        lo, hi = k * 200 // 3, (k + 1) * 200 // 3
+        df.where((F.col("event_id") >= lo) & (F.col("event_id") < hi)).coalesce(
+            1
+        ).write.mode("overwrite").parquet(os.path.join(src, f"slice{k}.parquet"))
+        _stamp_replay_order(os.path.join(src, f"slice{k}.parquet"), k)
+    stream = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{src}/*")
+    )
+    emitted = run_to_memory(
+        p2_quantile_stream(stream), "q_p2_bitexact_sink", mode="append"
+    ).collect()
+    settled = max(emitted, key=lambda r: r["n_seen"])
+    assert settled["n_seen"] == 200
+    assert settled["p2_estimate"] == _p2_python_fold(vals)  # BIT-exact
 
 
 def test_upsert_sink_crash_restart_idempotent(spark, sf_dir):
@@ -263,7 +344,7 @@ def test_attribution_replay_resumes_from_checkpoint(spark, sf_dir):
     from datetime import timedelta
 
     from dumbo_spark.streaming.runners import _sentinel_safe_bounds
-    from dumbo_spark.streaming.windows import click_purchase_stream_full_join
+    from dumbo_spark.streaming.windows import click_purchase_stream_join
 
     base = tempfile.mkdtemp(prefix="attr_resume_")
     ev = load_table(spark, sf_dir, "events")
@@ -307,9 +388,10 @@ def test_attribution_replay_resumes_from_checkpoint(spark, sf_dir):
                 spark.readStream.schema(ev.schema)
                 .option("maxFilesPerTrigger", "1")
                 .parquet(os.path.join(base, side, "*"))
+                .withWatermark("ts", "2 hours")
             )
-        joined = click_purchase_stream_full_join(
-            sides["clicks"], sides["purchases"]
+        joined = click_purchase_stream_join(
+            sides["clicks"], sides["purchases"], how="fullOuter"
         )
         q = (
             joined.writeStream.format("parquet")

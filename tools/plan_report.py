@@ -225,7 +225,8 @@ def main() -> None:
                 f"{s['sortmerge_joins']} | {s['wholestage_codegen_spans']} | "
                 f"{s['python_evals']} | {'✓' if s['pushed_filters'] else '—'} | "
                 f"{s['take_ordered']} | {s['cartesian_products']} | "
-                f"{s['bnl_joins']} | {s['unpart_windows']} |"
+                f"{s['bnl_joins']} | "
+                f"{'?' if s['unpart_windows'] is None else s['unpart_windows']} |"
             )
             if s["cartesian_products"] > 0:
                 violations.append(f"{name}: CartesianProduct in plan")

@@ -85,7 +85,10 @@ def _completed_stages(spark) -> list[dict]:
 
 
 def run_one(spark, name: str, sf_dir: str) -> dict:
-    """Time one query and attribute its completed stages."""
+    """Time one query and attribute its completed stages; release its
+    caches and pins afterwards, so leaked blocks from an iterative
+    operator cannot inflate the next query (the 464s ghost, SCALE.md
+    round-12 continuation)."""
     from dumbo_spark.profiling import measure
     from dumbo_spark.registry import QUERIES
     from dumbo_spark.session import release_persistent_rdds

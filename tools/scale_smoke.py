@@ -6,15 +6,10 @@ global key) before anyone pays for a real cluster run.
 
     python tools/scale_smoke.py            # prints a timing table
 
-MEASUREMENT CAVEAT (r14): the smoke drives each query with ``.count()``
-because its PRIMARY signal is the row count (cross-sweep row drift =
-semantics change). Row counts are always exact, but the WALL-CLOCK is
-the count-path time, and for a query whose final step is a left join
-with a unique-keyed, otherwise-unreferenced right side, Catalyst
-eliminates that join under count() — the timing then under-reports the
-full materialization (measured: dedup_substring_trim count-pruned to a
-3-stage token count). Full-materialization scale timings live in
-SCALE.md's scale-class tables (tools/scale_class.py, noop sink).
+Each query runs through tools/scale_class.py's ``run_one``: timed once
+by ``dumbo_spark.profiling.measure()`` into the noop sink (the full
+plan), then its rows are counted untimed — the row count is the
+smoke's other signal (cross-sweep row drift = semantics change).
 """
 
 from __future__ import annotations
@@ -65,7 +60,10 @@ def build(spark, repl: int | None = None, out: str | None = None) -> None:
 
 
 def main() -> None:
-    from dumbo_spark.registry import QUERIES
+    # imported before the session starts: scale_class turns the UI on
+    # for its per-stage REST metrics
+    from scale_class import run_one
+
     from dumbo_spark.session import get_session
 
     spark = get_session("scale_smoke")
@@ -309,19 +307,9 @@ def main() -> None:
         names = [n for n in names if n in wanted]
     print(f"| query | sf0.1 ×{REPL} sec | rows |")
     print("|---|---|---|")
-    from dumbo_spark.session import release_persistent_rdds
-
     for name in names:
-        q = QUERIES[name]
-        t0 = time.perf_counter()
-        n = q.fn(spark, OUT).count()
-        dt = time.perf_counter() - t0
-        print(f"| {name} | {dt:.2f} | {n} |")
-        # isolate queries: leaked checkpoint blocks from iterative
-        # operators otherwise inflate everything after them (the 464s
-        # ghost, SCALE.md round-12 continuation)
-        spark.catalog.clearCache()
-        release_persistent_rdds(spark)
+        rec = run_one(spark, name, OUT)
+        print(f"| {name} | {rec['sec']} | {rec['rows']} |")
     spark.stop()
 
 
