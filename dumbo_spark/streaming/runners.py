@@ -347,7 +347,7 @@ def streaming_attribution(
     and purchases arrive as two separate watermarked file streams in
     time-ordered micro-batches, and Spark's symmetric hash join
     buffers/evicts both sides. The settled output equals the batch join
-    of the same ``how`` bit-for-bit — the oracle the driver checks.
+    of the same ``how`` bit-for-bit — its DuckDB oracle.
 
     Losslessness under eviction, by construction: each side is split
     at the SAME time boundary into chronological halves replayed
